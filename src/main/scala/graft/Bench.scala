@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main. Prints ONE compact JSON line the driver parses from a
   * bounded stdout tail (2000 chars): total first, then per-query seconds for
@@ -11,7 +10,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Optional args: query names to run (subset mode for local iteration on
     // a single slow query). No args = the full registered set. A typo'd
     // name must fail loudly, not silently shrink the run to a plausible-
@@ -25,19 +23,7 @@ object Bench {
     val selected =
       if (args.isEmpty) SparkEntry.queries
       else SparkEntry.queries.view.filterKeys(args.toSet).toMap
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Spark's default fallback (128 groups!) demotes every collect_set/
-      // collect_list aggregate to sort-based on any realistic group
-      // count; 1M keeps them hash-based here (−15% on the basket-family
-      // subset). Memory bound = per-partition group cardinality × buffer
-      // width — size to executor memory on a real cluster.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warm-up: absorbs JVM/codegen/session init so per-query times
     // reflect steady state. Every query runs once at the SMALLEST sibling

@@ -12,9 +12,9 @@ import graft.plans.{LshBucket, MinHashSig, RollingHash, SimHash60}
   * Column API:
   *
   * {{{
-  * SparkSession.builder()
+  * GraftSession.builder()
   *   .config("spark.sql.extensions", "graft.GraftExtensions")
-  *   ...
+  *   .getOrCreate()
   * spark.sql("SELECT minhash_sig(tokens, 32) FROM docs")
   * }}}
   *

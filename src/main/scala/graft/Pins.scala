@@ -6,8 +6,11 @@ import org.apache.spark.sql.DataFrame
   * lineage where a frame is read by several downstream branches.
   *
   * Default (`spark.graft.pins` unset or `on`): identical to
-  * `df.localCheckpoint(eager = false)` — the pin materializes inside the
-  * first consumer job and later branches read the stored blocks.
+  * `df.localCheckpoint(eager = false)`. With AQE on, building the pin
+  * already runs every shuffle stage below it (the adaptive plan executes
+  * its query stages to produce the pin's RDD); only the stage above the
+  * last exchange waits for the first consumer job, and later branches
+  * read the stored blocks. With AQE off nothing runs before that job.
   *
   * `spark.graft.pins=off` is a PLAN-DUMP DEBUG knob only (set by
   * tools/Explain): a checkpointed frame explains as `Scan ExistingRDD`,

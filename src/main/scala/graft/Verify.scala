@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,27 +9,16 @@ object Verify {
     // (driver always calls with two args → full surface).
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Invariance-campaign knobs (dev-only; driver never sets them):
     // results must not depend on shuffle fan-out, AQE re-planning, or
     // input-split boundaries — each override isolates one factor.
-    val shuffle =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
-    val maxPart =
-      sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "128m")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.files.maxPartitionBytes", maxPart)
-      .config("spark.sql.session.timeZone", "UTC")
-      // same hash-aggregate floor as Bench (see the comment there):
-      // Spark's 128-group default demotes every collect_set/collect_list
-      // to sort-based aggregation
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1000000")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder()
+      .config("spark.sql.shuffle.partitions", sys.env.getOrElse(
+        "SPARK_GRAFT_SHUFFLE_PARTITIONS", GraftSession.cpus.toString))
+      .config("spark.sql.adaptive.enabled",
+        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+      .config("spark.sql.files.maxPartitionBytes",
+        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "128m"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -52,9 +52,10 @@ object GlobalRank {
     // final join). monotonically_increasing_id is nondeterministic and
     // partition-id assignment depends on sampled range boundaries, so a
     // re-evaluation under a future AQE/sampling change could hand the
-    // two branches DIFFERENT ids. Lazy localCheckpoint pins one
+    // two branches DIFFERENT ids. localCheckpoint pins one
     // materialization both branches read (same pattern as the
-    // InferenceAnalytics shared rank walks). Routed through
+    // InferenceAnalytics shared rank walks; with AQE on, its range
+    // shuffle runs at construction, see graft.Pins). Routed through
     // Pins.pinned() so plan dumps can see through it — but unlike the
     // plain plan-size pins, THIS pin is correctness-load-bearing under
     // execution; `spark.graft.pins=off` is explain-only by contract

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection harness: prints the formatted physical plan of selected
   * SparkEntry queries (all when no names given). Dev tool, not part of the
   * driver contract. Runs with `spark.graft.pins=off` so the lazy
@@ -9,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   * ExistingRDD` — the dump shows FileScans, PushedFilters and join
   * strategies end to end (plans are only EXPLAINED here, never executed,
   * so the single-materialization guarantees the pins exist for are not
-  * needed; see graft.Pins).
+  * needed; see graft.Pins). The session is Bench's: graft.GraftSession.
   * Usage: runMain graft.tools.Explain <sfDir> [q ...]
   * With SPARK_GRAFT_PLAN_DIR set, each query's plan is also written to
   * `$SPARK_GRAFT_PLAN_DIR/<query>.txt` for the plans/ evidence files. */
@@ -19,17 +17,12 @@ object Explain {
     val names = if (args.length > 1) args.drop(1).toSeq
                 else graft.SparkEntry.queries.keys.toSeq.sorted
     val planDir = sys.env.get("SPARK_GRAFT_PLAN_DIR")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.GraftSession.builder()
       // SPARK_GRAFT_PINS=on dumps the EXECUTED shape (pins truncate the
       // lineage but exchange/join counts match what actually runs);
       // default off shows scans/filters end to end (iterative queries
       // re-expand shared subtrees, so node counts are inflated there).
-      .config("spark.graft.pins",
-        sys.env.getOrElse("SPARK_GRAFT_PINS", "off"))
-      .config("spark.ui.enabled", "false")
+      .config("spark.graft.pins", sys.env.getOrElse("SPARK_GRAFT_PINS", "off"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>

@@ -2,26 +2,46 @@ package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Micro-profiler: times selected SparkEntry queries N times each (after a
-  * shared warm-up) so regressions can be localized without the full Bench
-  * run, and reports the scheduling anatomy (jobs / stages / tasks and the
-  * summed task time) of the LAST rep so "is this query slow because of
-  * engine work or because of job-count overhead" is read off a number.
+  * warm rep) so regressions can be localized without the full Bench run,
+  * and splits the LAST rep into [[Profile.Layers]] — construction (with
+  * its eager analysis and the jobs the builder starts), the action's own
+  * optimization and physical planning, execution, and the scheduling
+  * anatomy (jobs / stages / tasks and the summed task time) — so "is this
+  * query slow because of building the plan, engine work or job-count
+  * overhead" is read off a number.
   * `SPARK_GRAFT_CONF=k=v;k=v` applies extra session confs (runtime-settable
   * ones only) before the warm-up, for A/B experiments. Dev tool, not part
   * of the driver contract.
   * Usage: runMain graft.tools.Profile <sfDir> <reps> [q ...] */
 object Profile {
-  private class Counts extends SparkListener {
-    @volatile var jobs = 0
-    @volatile var stages = 0
-    @volatile var tasks = 0
+  private val ConstructGroup = "graft-profile-construct"
+
+  /** Job/stage/task counts, construction jobs (those carrying
+    * `ConstructGroup`), and the planning phases of the last action that
+    * succeeded. Registers itself on `spark`; `close()` removes it. */
+  final class Recorder(spark: SparkSession) extends SparkListener
+      with QueryExecutionListener {
+    @volatile var jobs, conJobs, stages, tasks = 0
     @volatile var taskMs = 0L
+    @volatile var phases = Map.empty[String, Long]
     val stageLog =
       new java.util.concurrent.ConcurrentLinkedQueue[(String, Int, Long)]
-    override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
+    spark.sparkContext.addSparkListener(this)
+    spark.listenerManager.register(this)
+    def close(): Unit = {
+      spark.sparkContext.removeSparkListener(this)
+      spark.listenerManager.unregister(this)
+    }
+    override def onJobStart(j: SparkListenerJobStart): Unit = {
+      jobs += 1
+      if (Option(j.properties).exists(
+          _.getProperty("spark.jobGroup.id") == ConstructGroup)) conJobs += 1
+    }
     override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
       stages += 1
       val i = s.stageInfo
@@ -33,7 +53,41 @@ object Profile {
       tasks += 1
       if (t.taskInfo != null) taskMs += t.taskInfo.duration
     }
-    def snap(): (Int, Int, Int, Long) = (jobs, stages, tasks, taskMs)
+    override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+      phases = qe.tracker.phases.map { case (k, p) => k -> p.durationMs }
+    override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+  }
+
+  /** One query run split into layers, in ms: `conMs` builds the frame and
+    * holds its eager analysis (`anaMs`) and the `conJobs` it starts;
+    * `exeMs` is its `count()` and holds that action's own optimization and
+    * physical planning (`optMs`, `planMs`). `wallMs` spans both. Jobs,
+    * stages, tasks and task-seconds cover both layers. */
+  final case class Layers(wallMs: Double, conMs: Double, anaMs: Double,
+                          conJobs: Int, optMs: Double, planMs: Double,
+                          exeMs: Double, jobs: Int, stages: Int, tasks: Int,
+                          taskSec: Double)
+
+  def measure(spark: SparkSession, rec: Recorder)(build: => DataFrame): Layers = {
+    val sc = spark.sparkContext
+    // listener events arrive asynchronously; drain the bus before each
+    // snapshot so the per-query deltas are exact
+    drainListenerBus(spark)
+    val (j0, c0, s0, k0, ms0) =
+      (rec.jobs, rec.conJobs, rec.stages, rec.tasks, rec.taskMs)
+    rec.phases = Map.empty
+    val t0 = System.nanoTime()
+    sc.setJobGroup(ConstructGroup, "profile: construct")
+    val df = try build finally sc.clearJobGroup()
+    val t1 = System.nanoTime()
+    df.count()
+    val t2 = System.nanoTime()
+    drainListenerBus(spark)
+    def ph(p: String) = rec.phases.getOrElse(p, 0L).toDouble
+    val ana = df.queryExecution.tracker.phases.get("analysis")
+    Layers((t2 - t0) / 1e6, (t1 - t0) / 1e6, ana.fold(0.0)(_.durationMs.toDouble),
+      rec.conJobs - c0, ph("optimization"), ph("planning"), (t2 - t1) / 1e6,
+      rec.jobs - j0, rec.stages - s0, rec.tasks - k0, (rec.taskMs - ms0) / 1e3)
   }
 
   /** `SparkContext.listenerBus` is private[spark]; reach it reflectively
@@ -54,15 +108,7 @@ object Profile {
     val reps = args.drop(1).headOption.map(_.toInt).getOrElse(3)
     val names = if (args.length > 2) args.drop(2).toSeq
                 else graft.SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
       kv.split("=", 2) match {
@@ -72,43 +118,29 @@ object Profile {
           s"[profile] ignoring malformed SPARK_GRAFT_CONF segment '$kv'")
       }
     })
-    val counts = new Counts
-    spark.sparkContext.addSparkListener(counts)
+    val rec = new Recorder(spark)
     spark.range(1000000).selectExpr("sum(id)").collect()
     names.foreach { n =>
       graft.SparkEntry.queries.get(n).foreach { fn =>
-        try fn(spark, sfDir).count() // warm rep (codegen, listing)
-        catch { case e: Throwable => println(s"$n WARMUP FAILED: $e") }
-        val times = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          try fn(spark, sfDir).count()
-          catch { case e: Throwable => println(s"$n FAILED: $e") }
-          (System.nanoTime() - t0) / 1e9
-        }
-        // listener events arrive asynchronously; drain the bus before
-        // each snapshot so the per-query deltas are exact
-        drainListenerBus(spark)
-        val before = counts.snap()
-        val tLast = {
-          val t0 = System.nanoTime()
-          try fn(spark, sfDir).count()
-          catch { case e: Throwable => println(s"$n FAILED: $e") }
-          (System.nanoTime() - t0) / 1e9
-        }
-        drainListenerBus(spark)
-        val after = counts.snap()
-        println(f"$n%-28s min=${times.min}%.3f " +
-          f"med=${times.sorted.apply(reps / 2)}%.3f last=$tLast%.3f " +
-          f"jobs=${after._1 - before._1}%d stages=${after._2 - before._2}%d " +
-          f"tasks=${after._3 - before._3}%d taskSec=${(after._4 - before._4) / 1e3}%.2f")
+        try {
+          fn(spark, sfDir).count() // warm rep (codegen, listing)
+          val runs = (1 to reps).map(_ => measure(spark, rec)(fn(spark, sfDir)))
+          val secs = runs.map(_.wallMs / 1e3).sorted
+          val l = runs.last
+          println(f"$n%-28s min=${secs.head}%.3f med=${secs(reps / 2)}%.3f " +
+            f"last=${l.wallMs / 1e3}%.3f con=${l.conMs}%.1f " +
+            f"(ana=${l.anaMs}%.0f jobs=${l.conJobs}%d) opt=${l.optMs}%.0f " +
+            f"plan=${l.planMs}%.0f exe=${l.exeMs}%.1f ms jobs=${l.jobs}%d " +
+            f"stages=${l.stages}%d tasks=${l.tasks}%d taskSec=${l.taskSec}%.2f")
+        } catch { case e: Throwable => println(s"$n FAILED: $e") }
         if (sys.env.contains("SPARK_GRAFT_STAGES")) {
           import scala.jdk.CollectionConverters._
-          counts.stageLog.asScala.toSeq.sortBy(-_._3).take(12).foreach {
+          rec.stageLog.asScala.toSeq.sortBy(-_._3).take(12).foreach {
             case (nm, nt, dur) =>
               println(f"    stage $dur%6dms tasks=$nt%-4d $nm")
           }
         }
-        counts.stageLog.clear()
+        rec.stageLog.clear()
       }
     }
     spark.stop()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.FloatType
 
@@ -70,13 +70,7 @@ object ScaleGen {
     // ±0.04 of one fixed centroid). These are the distributions the
     // LSH bucket caps and IVF probe behavior exist for.
     val zipf = args.contains("--zipf")
-    val cpus   = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val rep  = col("rep")

@@ -17,26 +17,15 @@ class CodegenSpec extends AnyFunSuite {
   // strict flags. SparkSession confs are per-session (SQLConf), so this
   // coexists with the shared-context suites.
   lazy val strict: SparkSession = {
-    val base = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val base = GraftSession.builder(cores = 4).getOrCreate()
     val s = base.newSession()
     s.conf.set("spark.sql.codegen.fallback", "false")
-    s.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-    graft.plans.TextSketches.register(s)
-    graft.plans.VectorOps.register(s)
-    graft.plans.PHash63.register(s)
-    graft.plans.RollingHash.register(s)
-    graft.plans.JaroWinklerSim.register(s)
-    graft.plans.TokenStats.register(s)
-    s
+    withNatives(s, "CODEGEN_ONLY")
   }
-  lazy val lax: SparkSession = {
-    val s = strict.newSession()
-    s.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+  lazy val lax: SparkSession = withNatives(strict.newSession(), "NO_CODEGEN")
+
+  private def withNatives(s: SparkSession, factoryMode: String): SparkSession = {
+    s.conf.set("spark.sql.codegen.factoryMode", factoryMode)
     graft.plans.TextSketches.register(s)
     graft.plans.VectorOps.register(s)
     graft.plans.PHash63.register(s)

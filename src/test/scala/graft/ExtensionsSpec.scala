@@ -12,13 +12,8 @@ class ExtensionsSpec extends org.scalatest.funsuite.AnyFunSuite {
     org.apache.spark.sql.SparkSession.getActiveSession.foreach(_.stop())
     org.apache.spark.sql.SparkSession.clearActiveSession()
     org.apache.spark.sql.SparkSession.clearDefaultSession()
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-test")
+    val spark = GraftSession.builder(cores = 2)
       .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     try {
       val row = spark.sql(

@@ -3,17 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session: one per suite (lazy), UTC, small shuffle fan-out. */
+/** Shared session: one per suite (lazy), GraftSession at a fixed 4 cores. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // same hash-aggregate floor as Bench/Verify (results identical —
-    // only the aggregation strategy changes; see Bench.scala)
-    .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-      "1000000")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(cores = 4).getOrCreate()
 }
