@@ -4,7 +4,9 @@ package graft
   * bounded stdout tail (2000 chars): total first, then per-query seconds for
   * the slowest queries only, the remainder aggregated under "other_sec".
   * The full per-query breakdown is written to BENCH_DETAIL.json so humans
-  * (and the judge) can see every number without the tail-size constraint. */
+  * (and the judge) can see every number without the tail-size constraint;
+  * its "shared" map names the timed query that built each [[Shared]]
+  * frame, because every later consumer of that frame reads it warm. */
 object Bench {
   private def f3(d: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, d)
 
@@ -40,6 +42,7 @@ object Bench {
     }
     try spark.range(1000000).selectExpr("sum(id)").collect()
     catch { case e: Throwable => System.err.println(s"warmup init failed: $e") }
+    val warmPins = Shared.persisted(spark)
     selected.foreach { case (name, fn) =>
       try fn(spark, warmDir).count()
       catch { case e: Throwable =>
@@ -47,27 +50,11 @@ object Bench {
           s"warmup $name failed: ${e.getClass.getSimpleName}: ${e.getMessage}")
       }
     }
-    // Drain warm-up detritus BEFORE the first timed query. The warm-up
-    // leaves ~4000 dead pinned RDDs (lazy localCheckpoints), shuffles and
-    // broadcasts behind; Spark's ContextCleaner only reclaims them after a
-    // driver GC flushes its weak references, so the whole backlog lands as
-    // one cleanup storm wherever the first old-gen GC happens to fire —
-    // measured at local[32]/sf0.1 as a 2-5x inflation of whichever timed
-    // queries it lands on (the alphabetical region varies per run: a* in
-    // the r13 driver run, t-z in one r14 rep, b-d with a 45s periodic-GC
-    // interval). Unpersisting the warm-up pins explicitly and forcing one
-    // GC here moves that storm into untimed setup. Timed-loop state is
-    // untouched: every cross-query memo is keyed by fixture dir (or the
-    // scan's plan hash, which embeds the path), so nothing pinned at
-    // warmDir is ever read at sfDir; the guard keeps the drain off in the
-    // degenerate warmDir == sfDir case where memos WOULD be shared.
-    if (warmDir != sfDir) {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-      Thread.sleep(3000) // let the cleaner thread drain its queue
-      System.gc()
-    }
+    // The timed loop starts from nothing persisted: the warm-up's shared
+    // frames and its own pins are unpersisted here, in untimed setup, and
+    // every shared frame is built again by the timed query that needs it.
+    Shared.release(spark)
+    Shared.releasePins(spark, warmPins)
     // Fixed alphabetical run order: Map iteration order shifts whenever the
     // query set grows, which made round-over-round per-query comparisons
     // order-biased (shared caches, OS page cache, JIT state all depend on
@@ -75,20 +62,10 @@ object Bench {
     // A thrown query is NOT a timing: record it as an error, never as a
     // plausible-looking fast number (round 4 shipped a 103-query breakage
     // as "0.057 s each, rc=0" exactly this way).
-    var sinceGc = 0
+    val builtBy = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     val runs = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      // Periodic between-query GC: the timed queries themselves leave dead
-      // pinned RDDs behind (each query's lazy checkpoints die when its
-      // DataFrame goes out of scope), and the ContextCleaner is GC-gated —
-      // left alone the backlog of a few hundred queries lands as a second
-      // cleanup storm inside whichever late-alphabet queries the next
-      // old-gen GC hits (same mechanism as the warm-up storm above, same
-      // 2-4x inflation, worse at 32 cores where each pin holds 4x the
-      // blocks). Reclaim in small doses strictly BETWEEN timed windows.
-      // Memoized cross-query frames are strongly referenced by their
-      // TrieMaps and survive any GC; only dead pins are reclaimed.
-      sinceGc += 1
-      if (sinceGc >= 32) { sinceGc = 0; System.gc(); Thread.sleep(2000) }
+      val pins = Shared.persisted(spark)
+      val shared = Shared.keys(spark)
       val t0 = System.nanoTime()
       // keep the count: for the pair-enumeration forms the OUTPUT rows
       // are the scale story ("time grew 12x because pairs grew 100x"),
@@ -98,7 +75,13 @@ object Bench {
         catch { case e: Throwable =>
           Left(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
         }
-      (name, (System.nanoTime() - t0) / 1e9, res)
+      val run = (name, (System.nanoTime() - t0) / 1e9, res)
+      // Outside the timed window: unpersist the pins this query left
+      // behind (shared frames it built stay held for later consumers), and
+      // record which shared frames it paid for.
+      Shared.releasePins(spark, pins)
+      builtBy ++= (Shared.keys(spark) -- shared).toSeq.sorted.map(_ -> name)
+      run
     }
     // A thrown query's time-to-throw is NOT a timing: it is excluded from
     // total_sec and from the compact line's queries map entirely, so a slow
@@ -115,13 +98,15 @@ object Bench {
     // evidence tables can show output growth next to time growth.
     val rowsJson = rowCounts.sortBy(_._1)
       .map { case (k, c) => s""""$k": $c""" }.mkString("{", ", ", "}")
+    val sharedJson = builtBy.map { case (k, q) => s""""$k": "$q"""" }
+      .mkString("{", ", ", "}")
     val detail = (results.sortBy(-_._2)
       .map { case (k, v) => s"""  "$k": ${f3(v)}""" } ++
       failed.map { case (k, _) => s"""  "$k": "ERROR"""" })
       .mkString(
         s"""{\n  "total_sec": ${f3(total)},\n  "errors": ${failed.length},\n""" +
           s"""  "failed": [${failed.map(f => s""""${f._1}"""").mkString(", ")}],\n""" +
-          s"""  "sf": "$sfDir",\n  "rows": $rowsJson,\n""",
+          s"""  "sf": "$sfDir",\n  "rows": $rowsJson,\n  "shared": $sharedJson,\n""",
         ",\n", "\n}\n")
     try java.nio.file.Files.writeString(
       java.nio.file.Path.of("BENCH_DETAIL.json"), detail)

@@ -2393,12 +2393,8 @@ object SparkEntry {
     * (session, fixture dir) behind a localCheckpoint like
     * StarAnalytics.coPurchaseCounts — both consumers previously re-ran
     * the regex-heavy normalizer over the full synth per bench run. */
-  private val intlCanonicalMemo =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
-
   private def intlCanonical(s: SparkSession, d: String): DataFrame =
-    intlCanonicalMemo.getOrElseUpdate(
-      (System.identityHashCode(s), d),
+    Shared(s, s"intl@$d")(
       graft.ingest.KaggleNormalizer.normalizeInternationalSales(
         intlRawSynth(s, d)).localCheckpoint())
 

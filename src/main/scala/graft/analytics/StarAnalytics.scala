@@ -680,12 +680,8 @@ object StarAnalytics {
     * 1.2M-pair aggregate, and without the memo each recomputed the full
     * basket pass (~3 scans and shuffles of lineitem per bench run). The
     * checkpoint materializes once; later callers read the cached blocks. */
-  private val coPurchaseMemo =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
-
   def coPurchaseCounts(spark: SparkSession, sfDir: String): DataFrame =
-    coPurchaseMemo.getOrElseUpdate(
-      (System.identityHashCode(spark), sfDir),
+    graft.Shared(spark, s"coPurchase@$sfDir")(
       coPurchaseCountsUncached(spark, sfDir).localCheckpoint())
 
   /** Per-order sorted part sets — THE canonical basket frame. ONE corpus
@@ -700,12 +696,8 @@ object StarAnalytics {
     * Memoized per (session, fixture dir) behind a localCheckpoint, which
     * also preserves the hashpartitioning(l_orderkey) so order-keyed
     * consumers re-aggregate without an exchange. */
-  private val orderSetsMemo =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
-
   def orderSets(spark: SparkSession, sfDir: String): DataFrame =
-    orderSetsMemo.getOrElseUpdate(
-      (System.identityHashCode(spark), sfDir),
+    graft.Shared(spark, s"orderSets@$sfDir")(
       // NO parallelism floor before the groupBy, same rationale as ever:
       // the keyed exchange is where parallelism starts, and the heavy
       // consumers (basket explode, CF scoring) run downstream of it
@@ -726,12 +718,8 @@ object StarAnalytics {
     * as assoc-rules' antecedent/consequent counts and item-CF's cosine
     * normalizer, so the explode + aggregate pass over the basket view
     * runs once per (session, fixture) instead of once per consumer. */
-  private val partFreqMemo =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
-
   def partFreq(spark: SparkSession, sfDir: String): DataFrame =
-    partFreqMemo.getOrElseUpdate(
-      (System.identityHashCode(spark), sfDir),
+    graft.Shared(spark, s"partFreq@$sfDir")(
       orderParts(spark, sfDir).groupBy(col("l_partkey"))
         .agg(count(lit(1)).as("n_part"))
         .localCheckpoint())

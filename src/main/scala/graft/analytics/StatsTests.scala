@@ -10,14 +10,10 @@ import graft.operators.Sampling
   * and tail fits - orderBreadth memo .. ebShrinkage. */
 private[analytics] trait StatsTests {
   this: StatsAnalytics.type =>
-  private val breadthMemo = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), DataFrame]
-
   private[graft] def orderBreadthAt(
       spark: org.apache.spark.sql.SparkSession,
       sfDir: String): DataFrame =
-    breadthMemo.getOrElseUpdate(
-      (System.identityHashCode(spark), sfDir),
+    graft.Shared(spark, s"orderBreadth@$sfDir")(
       orderBreadthFrame(graft.Tables.orders(spark, sfDir),
         graft.Tables.lineitem(spark, sfDir)).localCheckpoint())
 

@@ -430,13 +430,9 @@ object Curation {
     * [[dsirSample]] needs these rows for BOTH the model fit and the
     * per-doc scores, and the model query shares them too — without the
     * memo the corpus-scale gram explode runs three times per session. */
-  private val dsirMemo = scala.collection.concurrent.TrieMap
-    .empty[(Int, Int, Int), DataFrame]
-
   private def dsirBucketCounts(docs: DataFrame, buckets: Int): DataFrame =
-    dsirMemo.getOrElseUpdate(
-      (System.identityHashCode(docs.sparkSession),
-        docs.queryExecution.analyzed.semanticHash(), buckets),
+    graft.Shared(docs.sparkSession, s"dsir$buckets@" +
+        docs.queryExecution.analyzed.semanticHash())(
       dsirBucketCountsUncached(docs, buckets).localCheckpoint())
 
   private def dsirBucketCountsUncached(docs: DataFrame,

@@ -453,13 +453,9 @@ object DedupExt {
     * materialized via localCheckpoint so the second consumer reads the
     * sparse match frame shuffle-free instead of re-running the blocked
     * edit-distance pass. */
-  private val linkageMemo = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), DataFrame]
-
   def recordLinkageCached(spark: org.apache.spark.sql.SparkSession,
                           sfDir: String): DataFrame =
-    linkageMemo.getOrElseUpdate(
-      (System.identityHashCode(spark), sfDir),
+    graft.Shared(spark, s"linkage@$sfDir")(
       recordLinkage(graft.Tables.part(spark, sfDir)).localCheckpoint())
 
   /** Golden-record survivorship — the master-data-management step that

@@ -490,12 +490,8 @@ object EvalOps {
     * both need it in one Bench run — same sharing policy (and key shape)
     * as `StarAnalytics.coPurchaseCounts`, materialized via
     * localCheckpoint so the second consumer reads shuffle-free. */
-  private val itemCFMemo =
-    scala.collection.concurrent.TrieMap.empty[(Int, String, Int), DataFrame]
-
   def itemCF(spark: SparkSession, sfDir: String, topK: Int = 5): DataFrame =
-    itemCFMemo.getOrElseUpdate(
-      (System.identityHashCode(spark), sfDir, topK),
+    graft.Shared(spark, s"itemCF$topK@$sfDir")(
       itemCFUncached(spark, sfDir, topK).localCheckpoint())
 
   /** The un-memoized neighbour build — the frame PlanShapeSpec pins. */

@@ -34,13 +34,9 @@ object TextAnalysis {
       .groupBy("doc_id", "lang", "source", "term")
       .agg(count(lit(1)).as("tf"))
 
-  private val docTfMemo = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), DataFrame]
-
   def docTermFreq(spark: org.apache.spark.sql.SparkSession,
                   sfDir: String): DataFrame =
-    docTfMemo.getOrElseUpdate(
-      (System.identityHashCode(spark), sfDir),
+    graft.Shared(spark, s"docTf@$sfDir")(
       docTermFreqOf(graft.Tables.documents(spark, sfDir)).localCheckpoint())
 
   /** Church–Gale term burstiness: for each term above a document-
@@ -1017,13 +1013,9 @@ object TextAnalysis {
     * `q_ccnet_buckets` both need it in one Bench run — same sharing
     * policy (and key shape) as [[docTermFreq]], localCheckpointed so the
     * second consumer reads doc-sized scores shuffle-free. */
-  private val bigramLpMemo = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), DataFrame]
-
   def bigramLogprobCached(spark: org.apache.spark.sql.SparkSession,
                           sfDir: String): DataFrame =
-    bigramLpMemo.getOrElseUpdate(
-      (System.identityHashCode(spark), sfDir),
+    graft.Shared(spark, s"bigramLp@$sfDir")(
       bigramLogprob(graft.Tables.documents(spark, sfDir)).localCheckpoint())
 
   /** CCNet-style perplexity bucketing (Wenzek et al. 2020): per
@@ -1311,18 +1303,13 @@ object TextAnalysis {
       .orderBy(col("weighted_freq").desc, col("sym"))
       .limit(topK)
 
-  /** Memo for [[bpeRounds]] keyed on the input plan's semantic hash —
-    * q_bpe_learn and q_bpe_vocab share one merge-loop execution per
-    * corpus (same contract as the co-purchase memo; results are
-    * localCheckpoint-materialized so the cache holds data, not lineage). */
-  private val bpeMemo = scala.collection.concurrent.TrieMap
-    .empty[(Int, Int, Int, Int), (DataFrame, DataFrame)]
-
+  /** Shared per input plan (its semantic hash): q_bpe_learn and
+    * q_bpe_vocab share one census job and merge loop per corpus. Both
+    * results are driver-local frames, so the entry pins no RDDs. */
   private def bpeRounds(docs: DataFrame, rounds: Int,
                         topWords: Int): (DataFrame, DataFrame) =
-    bpeMemo.getOrElseUpdate(
-      (System.identityHashCode(docs.sparkSession),
-        docs.queryExecution.analyzed.semanticHash(), rounds, topWords),
+    graft.Shared(docs.sparkSession, s"bpe$rounds.$topWords@" +
+        docs.queryExecution.analyzed.semanticHash())(
       bpeRoundsUncached(docs, rounds, topWords))
 
   /** The merge loop itself runs DRIVER-LOCAL over the collected census —
