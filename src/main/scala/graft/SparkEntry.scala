@@ -12,6 +12,8 @@ import graft.analytics.{EventAnalytics, InferenceAnalytics, StarAnalytics, Stats
   * Conventions (so the driver's column-sorted value-hash matches):
   *  - every computed column is aliased identically in Spark and SQL;
   *  - timestamps exported as microsecond strings (`tsMicros` ↔ strftime %f);
+  *  - doubles rounded half-up at 6 decimals (`CleanFns.r6` ↔
+  *    `FLOOR(x * 1000000.0 + 0.5) / 1000000.0`);
   *  - derived integers cast to bigint on both sides (DuckDB year()/
   *    row_number() are BIGINT; DuckDB SUM(int) is HUGEINT → CAST in SQL);
   *  - deterministic ORDER BY everywhere, with tie-breaking keys.

@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
+import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType,
+  TimestampType}
 
 /** Loaders for the driver fixtures (`/root/testdata/sf*`; see TESTDATA.md).
   *
@@ -31,19 +34,22 @@ object Tables {
   def events(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = table(s, d, "events")
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts",
-          org.apache.spark.sql.functions.timestamp_micros(
-            org.apache.spark.sql.functions.expr("ts DIV 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
+    withEventTs(raw, raw.schema("ts").dataType)
+  }
+
+  /** The one `events.ts` adapter, for batch and streaming reads alike:
+    * `tsType` is the dtype the parquet schema gave `ts`. */
+  private[graft] def withEventTs(raw: DataFrame, tsType: DataType): DataFrame =
+    tsType match {
+      case LongType =>
+        raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
+      case TimestampNTZType =>
         // un-annotated parquet micros infer as NTZ; normalize to the
         // session-zone TimestampType every downstream consumer
         // (unix_micros, watermarks) expects — value-identical under the
         // UTC session zone all entry points set
-        raw.withColumn("ts",
-          org.apache.spark.sql.functions.col("ts").cast("timestamp"))
-      case org.apache.spark.sql.types.TimestampType => raw
+        raw.withColumn("ts", col("ts").cast("timestamp"))
+      case TimestampType => raw
       case other =>
         // a THIRD fixture encoding must fail loudly at the loader, not as
         // an obscure downstream cast error (the silent-adaptation pattern
@@ -53,7 +59,7 @@ object Tables {
             "(expected long nanos, TIMESTAMP_NTZ micros, or TIMESTAMP); " +
             "teach Tables.events the new fixture encoding explicitly")
     }
-  }
+
   /** Floor on scan parallelism for compute-heavy corpora. A real corpus
     * arrives as thousands of splits, so this guard is a NO-OP at cluster
     * scale (splits ≥ cores ⇒ the frame passes through untouched — no
@@ -66,27 +72,37 @@ object Tables {
     * why it arrived as one split) frame restores parallelism.
     *
     * The floor is SIZE-ADAPTIVE, not a constant: the target is
-    * ceil(scanBytes / minSplitBytes), capped at the session shuffle
+    * ceil(scanBytes / MinSplitBytes), capped at the session shuffle
     * partition count — i.e. never create partitions carrying less than
-    * ~minSplitBytes of input. A constant floor of numShufflePartitions
+    * ~MinSplitBytes of input. A constant floor of numShufflePartitions
     * spread a sub-MB fixture over 32 partitions, and every downstream
     * stage of every consumer then ran 32+ near-empty tasks whose fixed
     * cost (launch, broadcast fetch, shuffle bookkeeping) dwarfed the
     * data; measured on the embedding family this halved wall time and
     * cut summed task time ~15x at local[32] while leaving cluster-scale
-    * behaviour untouched (big scans hit the cap or the no-op path).
-    * `spark.graft.scan.minSplitBytes` overrides the per-partition
-    * target for A/B measurement. */
+    * behaviour untouched (big scans hit the cap or the no-op path). */
   private[graft] def withMinParallelism(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val cap = spark.sessionState.conf.numShufflePartitions
-    val minSplit = spark.conf
-      .get("spark.graft.scan.minSplitBytes", (128 * 1024).toString).toLong
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val target = ((bytes + minSplit - 1) / minSplit)
-      .min(BigInt(cap)).max(BigInt(1)).toInt
+    val target = partitionsFor(df.sparkSession, bytes, MinSplitBytes)
     if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
   }
+
+  /** Input bytes per partition below which [[withMinParallelism]] stops
+    * splitting. The scan's `sizeInBytes` is the COMPRESSED on-disk size,
+    * while documents/embeddings consumers are compute-bound per
+    * decompressed row: a densely compressed fixture can land under this
+    * target and get fewer partitions than its narrow maps want, so
+    * re-measure this value if a compute-heavy fixture regresses. */
+  private val MinSplitBytes: Long = 128L * 1024
+
+  /** The engine's one output-sizing rule: ceil(bytes / targetBytes)
+    * partitions, capped at the session shuffle partition count and
+    * floored at 1. */
+  private[graft] def partitionsFor(spark: SparkSession, bytes: BigInt,
+                                   targetBytes: Long): Int =
+    ((bytes + targetBytes - 1) / targetBytes)
+      .min(BigInt(spark.sessionState.conf.numShufflePartitions))
+      .max(BigInt(1)).toInt
 
   /** `documents`/`embeddings` go through the parallelism floor: their
     * consumers run the engine's expensive narrow maps (tokenize, md5

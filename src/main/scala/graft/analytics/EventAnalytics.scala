@@ -319,7 +319,6 @@ object EventAnalytics {
       countDistinct(when(!col("h1"), col("user_id"))).as("ndv_u2"))
       .pinned() // five metric rows re-read ONE aggregated row
     def d(c: Column) = c.cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     def row(colName: String, metric: String, a: Column,
             bc: Column): DataFrame =
       m.select(lit(colName).as("column_name"), lit(metric).as("metric"),
@@ -379,7 +378,6 @@ object EventAnalytics {
       sum(dec(col("y"))).cast("double").as("sy"),
       sum(dec(col("x") * col("x"))).cast("double").as("sxx"),
       sum(dec(col("x") * col("y"))).cast("double").as("sxy"))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val n = d(col("n_offsets"))
     val slope = (n * col("sxy") - col("sx") * col("sy")) /
       (n * col("sxx") - col("sx") * col("sx"))
@@ -427,7 +425,6 @@ object EventAnalytics {
         (log(d(col("nn2")) / d(col("ni"))) / ln2))
         .cast("decimal(28,12)").as("m_t"))
       .agg(sum(col("m_t")).cast("double").as("h_marginal"))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     terms.crossJoin(broadcast(marg))
       .select(col("nn").as("n_transitions"), col("k").as("n_states"),
         r6(col("h_marginal")).as("h_marginal"),
@@ -453,7 +450,6 @@ object EventAnalytics {
       .filter(col("prev_us").isNotNull)
       .select((col("prev_us") - col("us")).as("back_us"))
     def d(c: Column) = c.cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val m = pairs.agg(count(lit(1)).as("n_pairs"),
       sum(when(col("back_us") > 0L, 1L).otherwise(0L)).as("n_backward"),
       sum(when(col("back_us") > 0L, col("back_us")).otherwise(0L))
@@ -497,7 +493,6 @@ object EventAnalytics {
         .as(s"drop_$t")
     }
     val m = staged.agg(aggs.head, aggs.tail: _*).pinned()
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     delaysSec.map { t =>
       m.select(lit(t).as("delay_s"), col("n_events"),
         col(s"drop_$t").as("n_dropped"),
@@ -530,7 +525,6 @@ object EventAnalytics {
     val m = joined.agg(count(lit(1)).as("n_days"),
       sum(dec(col("v"))).as("sv"), sum(dec(col("v") * col("v"))).as("svv"),
       sum(dec(col("r"))).as("sr"), sum(dec(col("r") * col("r"))).as("srr"))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val n = d(col("n_days"))
     val varV = d(col("svv")) / n - (d(col("sv")) / n) * (d(col("sv")) / n)
     val varR = d(col("srr")) / n - (d(col("sr")) / n) * (d(col("sr")) / n)
@@ -921,9 +915,9 @@ object EventAnalytics {
         Seq("type_b"))
       .select(col("type_a"), col("type_b"), col("n_a"), col("n_b"),
         col("n_both"),
-        (floor(col("n_both").cast("double") /
-          (col("n_a") + col("n_b") - col("n_both")).cast("double")
-          * lit(1000000.0) + lit(0.5)) / lit(1000000.0)).as("jaccard"))
+        r6(col("n_both").cast("double") /
+          (col("n_a") + col("n_b") - col("n_both")).cast("double"))
+          .as("jaccard"))
       .orderBy("type_a", "type_b")
   }
 
@@ -943,7 +937,6 @@ object EventAnalytics {
       .agg(count(lit(1)).as("n_days"), sum(col("dau")).as("sum_dau"))
     val mau = base.groupBy("month")
       .agg(countDistinct(col("user_id")).as("mau"))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     dau.join(mau, Seq("month"))
       .select(col("month"), col("n_days"), col("mau"),
         r6(col("sum_dau").cast("double") / col("n_days")).as("avg_dau"),
@@ -1004,7 +997,6 @@ object EventAnalytics {
       (col("sc") - col("c")).cast("double") *
         (col("sc") - col("c")).cast("double")) /
       (np * (np - lit(1.0)))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     perBucket.join(cellStats, Seq("dow", "hr"))
       .withColumn("loo_mean", looMean)
       .withColumn("loo_var", looVar)
@@ -1038,7 +1030,6 @@ object EventAnalytics {
       sum(when(col("pred") === 0 && col("label_active") === 0, 1L)
         .otherwise(0L)).as("tn"))
     def d(c: Column) = c.cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val prec = when(col("tp") + col("fp") > 0,
       d(col("tp")) / (d(col("tp")) + d(col("fp")))).otherwise(lit(0.0))
     val rec = when(col("tp") + col("fn") > 0,
@@ -1076,7 +1067,6 @@ object EventAnalytics {
       sum(when(col("pred") === 0 && col("label_active") === 0, 1L)
         .otherwise(0L)).as("tn"))
     def d(c: Column) = c.cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val denom = d(col("tp") + col("fp")) * d(col("tp") + col("fn")) *
       d(col("tn") + col("fp")) * d(col("tn") + col("fn"))
     val mcc = when(denom > 0.0,
@@ -1115,7 +1105,6 @@ object EventAnalytics {
         min(col("value")).as("mn"), max(col("value")).as("mx"),
         count(lit(1)).as("cnt"),
         sum(col("value").cast("decimal(28,12)")).as("sv"))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     perTs.groupBy(col("d"))
       .agg(min_by(col("ov"), col("ts")).as("open"),
         max_by(col("cv"), col("ts")).as("close"),
@@ -1144,7 +1133,6 @@ object EventAnalytics {
           col("user_id"))).as("n_signup"),
         countDistinct(when(col("event_type") === "purchase",
           col("user_id"))).as("n_purchase"))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val z = lit(1.96)
     val n = col("n_signup").cast("double")
     val p = col("n_purchase").cast("double") / n
@@ -1177,7 +1165,6 @@ object EventAnalytics {
           .as("n_pre"),
         sum(when(col("d") > col("cutoff"), 1L).otherwise(0L))
           .as("n_post"))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     per.agg(count(lit(1)).as("n_users"),
         sum(when(col("n_pre") > 0 && col("n_post") === 0, 1L)
           .otherwise(0L)).as("n_train_only"),
@@ -1311,7 +1298,6 @@ object EventAnalytics {
     val removedVals = channels.map(c => absorb(Some(c)))
     val effects = removedVals.map(a => base - a)
     val tot = effects.reduceLeft(_ + _)
-    def r6(x: Double): Double = math.floor(x * 1000000.0 + 0.5) / 1000000.0
     val spark = ev.sparkSession
     import spark.implicits._
     channels.lazyZip(removedVals).lazyZip(effects).toSeq.map {
@@ -1354,7 +1340,6 @@ object EventAnalytics {
       sum(when(col("ra") === 0 && col("rb") === 0, 1L).otherwise(0L))
         .as("both_wrong"))
     def d(c: Column) = c.cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val bc = d(col("b")) + d(col("c"))
     val chi2 = (d(col("b")) - d(col("c"))) * (d(col("b")) - d(col("c"))) /
       bc
@@ -1414,7 +1399,6 @@ object EventAnalytics {
       when(abs(diffOf(col(s"s0_$p"), col(s"n0_$p"))) >= abs(obs), 1L)
         .otherwise(0L)
     }.reduce(_ + _)
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     m.select(col("n").as("n_users"), r6(obs).as("diff_obs"),
       lit(nPerms.toLong).as("n_perms"), exceed.as("n_exceed"),
       r6((lit(1.0) + d(exceed)) / lit((nPerms + 1).toDouble))
@@ -1453,7 +1437,6 @@ object EventAnalytics {
       .pinned() // every λ arm re-weights the same band frame
     def dec(c: Column) = c.cast("decimal(38,12)")
     def d(c: Column) = c.cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     decays.map { lam =>
       // λ^k as exact repeated-multiplication literals (see scaladoc)
       val wts = Iterator.iterate(1.0)(_ * lam).take(horizon + 1).toSeq
@@ -1562,7 +1545,6 @@ object EventAnalytics {
         (wOf(popcnt(col("mask"))) * (lit(0.0) - col("v")))
           .cast("decimal(28,12)").as("t"))
     val terms = legA.unionAll(legB)
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     terms.groupBy("channel")
       .agg(sum(col("n")).as("n_units"),
         sum(col("t")).as("st"))

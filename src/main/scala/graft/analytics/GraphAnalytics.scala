@@ -4,6 +4,7 @@ import graft.Pins._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.CleanFns.r6
 
 /** Iterative graph analytics over relational edge lists — the second
   * distributed-iteration family beside connected components
@@ -190,8 +191,6 @@ object GraphAnalytics {
       visited = visited.unionAll(next).pinned()
     }
     def d(c: org.apache.spark.sql.Column) = c.cast("double")
-    def r6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     visited.groupBy("src")
       .agg((count(lit(1)) - 1L).as("n_reached"),
         sum(col("hop")).as("sum_dist"),
@@ -388,8 +387,6 @@ object GraphAnalytics {
       .crossJoin(mRow)
       .withColumn("num", lit(4L) * col("m") * col("e_c") -
         col("d_c") * col("d_c"))
-    def r6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val qTot = per.agg(sum(col("num")).as("num_tot"),
       max(col("m")).as("mm"))
     per.crossJoin(qTot)
@@ -447,8 +444,7 @@ object GraphAnalytics {
     m.select(col("n").as("n_edges"),
       // mean degree is a rational (int/int) — portable floor round; the
       // correlation has an irrational sqrt denominator, so round() is safe
-      (floor(d("sx") / n * lit(1000000.0) + lit(0.5)) / lit(1000000.0))
-        .as("mean_deg"),
+      r6(d("sx") / n).as("mean_deg"),
       round(when(den === 0.0, lit(null)).otherwise(num / den), 6)
         .as("assortativity"))
   }
@@ -606,8 +602,6 @@ object GraphAnalytics {
     val wedges = left
       .join(sym.select(col("a").as("z"), col("b").as("v")), Seq("z"))
       .filter(col("u") < col("v"))
-    def r6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     wedges
       .groupBy(col("u"), col("v"))
       .agg(count(lit(1)).as("common_neighbors"),
@@ -658,8 +652,6 @@ object GraphAnalytics {
       .filter(col("u") < col("v"))
     val common = wedges.groupBy(col("u"), col("v"))
       .agg(count(lit(1)).as("common_neighbors"))
-    def r6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     common
       .join(deg.select(col("z").as("u"), col("dg").as("deg_u")), Seq("u"))
       .join(deg.select(col("z").as("v"), col("dg").as("deg_v")), Seq("v"))
@@ -719,8 +711,6 @@ object GraphAnalytics {
     val wedges = left
       .join(kept.select(col("a").as("z"), col("b").as("v")), Seq("z"))
       .filter(col("u") < col("v"))
-    def r6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     wedges
       .groupBy(col("u"), col("v"))
       .agg(count(lit(1)).as("common_neighbors"),
@@ -765,8 +755,6 @@ object GraphAnalytics {
       .filter(col("u") < col("v"))
     val common = wedges.groupBy(col("u"), col("v"))
       .agg(count(lit(1)).as("common_neighbors"))
-    def r6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     common
       .join(deg.select(col("z").as("u"), col("dg").as("deg_u")), Seq("u"))
       .join(deg.select(col("z").as("v"), col("dg").as("deg_v")), Seq("v"))
@@ -807,8 +795,6 @@ object GraphAnalytics {
     val tot = e.agg(count(lit(1)).as("n_edges"))
     val nNodes = deg.agg(count(lit(1)).as("n_nodes"))
     def d(c: org.apache.spark.sql.Column) = c.cast("double")
-    def r6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val possibleClub = lit((k.toLong * (k - 1)) / 2).cast("double")
     within.crossJoin(broadcast(tot)).crossJoin(broadcast(nNodes))
       .select(lit(k.toLong).as("k"), col("n_within"), col("n_edges"),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.Sampling
+import graft.functions.CleanFns.r6
 
 /** Sequential-monitoring, survival-contrast, and randomization-inference
   * analytics — the statistical layer a pipeline owner leans on once the
@@ -24,9 +25,6 @@ import graft.operators.Sampling
   * literal critical values (no CDFs — the grangerLag1 convention).
   */
 object InferenceAnalytics {
-
-  private def r6(c: Column): Column =
-    floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
 
   /** The daily total-value series every monitoring op in this module
     * watches: one day aggregate, 2dp-rounded through DECIMAL (the

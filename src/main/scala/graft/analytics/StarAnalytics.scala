@@ -4,6 +4,7 @@ import graft.Pins._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.CleanFns.r6
 
 /** Star-schema read-side queries over the TPC-H-ish fixtures — the analog of
   * the reference's fact×dim joins (J2–J4, analytics.py:47,82,103;
@@ -887,8 +888,6 @@ object StarAnalytics {
       .agg(count(lit(1)).as("n_suppliers"),
         sum(col("r")).as("total"),
         sum(col("r") * col("r")).as("sum_sq"))
-    def r6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val hhi = col("sum_sq").cast("double") /
       (col("total").cast("double") * col("total").cast("double"))
     per.select(col("n_name"), col("n_suppliers"),
@@ -956,9 +955,8 @@ object StarAnalytics {
     sizes.join(flagged, Seq("p_brand"), "left")
       .select(col("p_brand"), col("n_parts"),
         coalesce(col("n_cold"), lit(0L)).as("n_cold"),
-        (floor(coalesce(col("n_cold"), lit(0L)).cast("double") /
-          col("n_parts").cast("double") * lit(1000000.0) + lit(0.5))
-          / lit(1000000.0)).as("pct_cold"))
+        r6(coalesce(col("n_cold"), lit(0L)).cast("double") /
+          col("n_parts").cast("double")).as("pct_cold"))
       .orderBy("p_brand")
   }
 
@@ -985,9 +983,8 @@ object StarAnalytics {
         .crossJoin(orphans.agg(count(lit(1)).as("n_orphan_keys")))
         .select(lit(rel).as("relationship"), col("n_child_keys"),
           col("n_orphan_keys"),
-          (floor(col("n_orphan_keys").cast("double") /
-            col("n_child_keys").cast("double") * lit(1000000.0) + lit(0.5))
-            / lit(1000000.0)).as("pct_orphans"))
+          r6(col("n_orphan_keys").cast("double") /
+            col("n_child_keys").cast("double")).as("pct_orphans"))
     }
     val li = Tables.lineitem(spark, sfDir)
     val o = Tables.orders(spark, sfDir)
@@ -1015,8 +1012,6 @@ object StarAnalytics {
     * engine's division rounding can flip a part across a class edge. */
   def abcClassification(lineitem: DataFrame): DataFrame = {
     def d(c: org.apache.spark.sql.Column) = c.cast("double")
-    def r6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     perPartAbc(lineitem).groupBy(col("cls"))
       .agg(count(lit(1)).as("n_parts"),
         sum(col("rev")).as("cls_rev"), max(col("total")).as("total"))
@@ -1069,8 +1064,6 @@ object StarAnalytics {
       .select(col("o_orderpriority").as("priority"),
         datediff(col("first_ship"), to_date(col("o_orderdate")))
           .cast("long").as("lag_days"))
-    def r6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     lags.groupBy(col("priority"))
       .agg(count(lit(1)).as("n_orders"),
         sum(col("lag_days")).as("s"),
@@ -1137,7 +1130,6 @@ object StarAnalytics {
         max(col("n_weeks")).as("n_weeks"))
       .pinned() // the stats pass and the rank window share it
     def d(c: Column) = c.cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val stats = weekly.groupBy("l_partkey")
       .agg(count(lit(1)).as("n_active"),
         sum(dec(col("q"))).cast("double").as("sq"),
@@ -1204,8 +1196,6 @@ object StarAnalytics {
         sum(col("rv")).as("rv"),
         max(col("n_weeks")).as("n_weeks"))
     def d(c: org.apache.spark.sql.Column) = c.cast("double")
-    def r6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val perPart = weekly.groupBy(col("l_partkey"))
       .agg(sum(dec(col("q"))).cast("double").as("sq"),
         sum(dec(col("q") * col("q"))).cast("double").as("sqq"),
@@ -1272,8 +1262,6 @@ object StarAnalytics {
         .cast("double") / lit(1000000.0)).as("new_parts_effect"),
       (sum(when(col("q2") === 0, -col("r1")).otherwise(lit(0L)))
         .cast("double") / lit(1000000.0)).as("lost_parts_effect"))
-    def r6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     m.select(r6(col("total_h1")).as("total_h1"),
       r6(col("total_h2")).as("total_h2"),
       r6(col("total_h2") - col("total_h1")).as("delta"),
@@ -1344,8 +1332,6 @@ object StarAnalytics {
       sum(dec(p1 * units(col("q1")))).cast("double").as("p1q1"),
       sum(dec(p2 * units(col("q2")))).cast("double").as("p2q2"),
       sum(dec(p1 * units(col("q2")))).cast("double").as("p1q2"))
-    def r6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val lasp = col("p2q1") / col("p1q1")
     val paas = col("p2q2") / col("p1q2")
     m.select(col("n_common_parts"), r6(lasp).as("laspeyres"),
@@ -1408,8 +1394,6 @@ object StarAnalytics {
       sum(dec(v * when(first, pow(oneMinus, mCol - iCol))
         .otherwise(lit(alpha) * pow(oneMinus, mCol - iCol))))
         .cast("double")
-    def r6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     idx
       .groupBy(col("l_partkey"), col("m"), col("total_z"))
       .agg(ewma(col("z"), col("i") === 1.0, col("m").cast("double"),
@@ -1450,8 +1434,6 @@ object StarAnalytics {
     val top1b = b.filter(col("rank2") === 1)
       .select(col("l_partkey").as("top1_h2"))
     def d(c: org.apache.spark.sql.Column) = c.cast("double")
-    def r6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     inter.crossJoin(broadcast(top1a)).crossJoin(broadcast(top1b))
       .select(lit(k.toLong).as("k"), col("n_common"),
         r6(d(col("n_common")) /
@@ -1482,8 +1464,6 @@ object StarAnalytics {
           .as("sxx"),
         sum(dec(col("x") * col("y"))).as("sxy"))
     def d(c: org.apache.spark.sql.Column) = c.cast("double")
-    def r6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val n = d(col("n"))
     val slope = (n * d(col("sxy")) - d(col("sx")) * d(col("sy"))) /
       (n * d(col("sxx")) - d(col("sx")) * d(col("sx")))
@@ -1521,7 +1501,6 @@ object StarAnalytics {
         .cast("decimal(28,6)")), 2).cast("double").as("r2"))
     val tot = cells.agg(sum(col("q1")).as("qt1"), sum(col("q2")).as("qt2"))
     def d(c: Column) = c.cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val g = d(col("qt2")) / d(col("qt1"))
     val pbar1 = col("r1") / d(col("q1"))
     val pbar2 = col("r2") / d(col("q2"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.Sampling
+import graft.functions.CleanFns.r6
 
 /** StatsAnalytics, part 3 of 4: smoothing/forecast folds and the
   * causal-inference wave - dyadicSmooth .. spearmanOnPairs. */
@@ -130,7 +131,6 @@ private[analytics] trait StatsCausal {
       .withColumn("fc", lag(col("x"), season).over(w))
       .filter(col("fc").isNotNull)
     def dec(c: Column) = c.cast("decimal(28,10)")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val m = scored.agg(count(lit(1)).as("n_days"),
       sum(dec(abs(col("x") - col("fc")))).cast("double").as("sae"),
       sum(dec((col("x") - col("fc")) * (col("x") - col("fc"))))
@@ -162,7 +162,6 @@ private[analytics] trait StatsCausal {
       .withColumn("dx", col("x") - lag(col("x"), 1).over(w))
       .filter(col("dx").isNotNull)
       .select(col("dx")).pinned()
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val v = deltas.agg(count(lit(1)).as("n_days"),
         expr(s"percentile(dx, $q)").as("var_raw"))
       .select(col("n_days"), r6(col("var_raw")).as("var_95"))
@@ -189,7 +188,6 @@ private[analytics] trait StatsCausal {
       .withColumn("ewma_fc", lag(col("s1"), 1).over(w))
       .filter(col("t") >= 2)
       .pinned()
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     def report(fcCol: String, name: String): DataFrame = {
       val err = col("x") - col(fcCol)
       base.agg(count(lit(1)).as("n_days"),
@@ -239,7 +237,6 @@ private[analytics] trait StatsCausal {
     val v = dd(col("r1")) * dd(col("r2")) * dd(col("c1")) *
       (dd(col("n")) - dd(col("c1"))) /
       (dd(col("n")) * dd(col("n")) * (dd(col("n")) - lit(1.0)))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     strata.agg(count(lit(1)).as("n_strata"),
         sum(col("a")).as("sum_a"),
         sum(e.cast("decimal(28,12)")).as("__se"),
@@ -283,7 +280,6 @@ private[analytics] trait StatsCausal {
       n11.as("n11"))
     def mean(s: String, n: String) =
       col(s).cast("double") / col(n).cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     agg.select(col("n00"), col("n01"), col("n10"), col("n11"),
       r6(mean("s00", "n00")).as("ctrl_pre"),
       r6(mean("s01", "n01")).as("ctrl_post"),
@@ -307,7 +303,6 @@ private[analytics] trait StatsCausal {
       .agg(sum(when(col("variant") === 0, 1L).otherwise(0L)).as("n_a"),
         sum(when(col("variant") === 1, 1L).otherwise(0L)).as("n_b"))
     def d(c: Column) = c.cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val n = d(col("n_a")) + d(col("n_b"))
     val e = n / lit(2.0)
     val chi2 = (d(col("n_a")) - e) * (d(col("n_a")) - e) / e +
@@ -337,7 +332,6 @@ private[analytics] trait StatsCausal {
       sum(col("b").cast("long")).as("sb"),
       sum(col("r").cast("long")).as("sr"))
     def d(c: Column) = c.cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val pTrue = d(col("sb")) / d(col("n"))
     val pObs = d(col("sr")) / d(col("n"))
     val pEst = (pObs - lit(0.25)) / lit(0.5)
@@ -389,7 +383,6 @@ private[analytics] trait StatsCausal {
         .cast("decimal(28,12)")).as("ra"),
       sum(col("t") * col("t") * col("t") - col("t")).as("tsum"))
     def d(c: Column) = c.cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val nA = d(col("n_a")); val nB = d(col("n_b")); val n = nA + nB
     val uA = d(col("ra")) - nA * (nA + lit(1.0)) / lit(2.0)
     val mu = nA * nB / lit(2.0)
@@ -435,7 +428,6 @@ private[analytics] trait StatsCausal {
         col("yd").cast("double").as("y"))
     def dec(c: Column) = c.cast("decimal(28,12)")
     def d(c: Column) = c.cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val m = per.agg(
       sum(when(col("z") === 1, 1L).otherwise(0L)).as("n1"),
       sum(when(col("z") === 0, 1L).otherwise(0L)).as("n0"),
@@ -493,7 +485,6 @@ private[analytics] trait StatsCausal {
       .filter(abs(col("x") - lit(cutoff)) <= lit(bandwidth))
     def dec(c: Column) = c.cast("decimal(28,12)")
     def d(c: Column) = c.cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val perOrder = lineitem
       .join(band, col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("l_orderkey"), col("x"))
@@ -552,7 +543,6 @@ private[analytics] trait StatsCausal {
         col("o_custkey") === col("c_custkey"))
       .select(col("c_mktsegment").as("segment"), col("x"))
     def d(c: Column) = c.cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val m = per.groupBy("segment")
       .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
         sum(col("x") * col("x")).as("sxx"))
@@ -597,7 +587,6 @@ private[analytics] trait StatsCausal {
       .pinned() // both rounds and the total read it
     def dec(c: Column) = c.cast("decimal(28,12)")
     def d(c: Column) = c.cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val tot = cells.agg(sum(col("n")).as("nt"),
       countDistinct(col("dow")).as("n_rows"),
       countDistinct(col("event_type")).as("n_cols"))
@@ -664,7 +653,6 @@ private[analytics] trait StatsCausal {
       sum(when(col("e") === 0L && col("y") === 0L, 1L).otherwise(0L))
         .as("dd"))
     def d(c: Column) = c.cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val n1 = col("a") + col("b")
     val n0 = col("c") + col("dd")
     val ok = n1 > 0L && n0 > 0L && col("a") > 0L && col("c") > 0L
@@ -707,7 +695,6 @@ private[analytics] trait StatsCausal {
       .pinned() // every feature arm scans it
     def dec(c: Column) = c.cast("decimal(28,12)")
     def d(c: Column) = c.cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     // H(label): binary entropy from the label census
     val hLabel = base.groupBy("label").agg(count(lit(1)).as("n"))
       .agg(sum(col("n")).as("nt"),
@@ -770,7 +757,6 @@ private[analytics] trait StatsCausal {
     val w = Window.orderBy(col("s").desc)
       .rowsBetween(Window.unboundedPreceding, 0)
     def d(c: Column) = c.cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val cum = census
       .withColumn("cnt", sum(col("nt")).over(w))
       .withColumn("cnc", sum(col("nc")).over(w))
@@ -827,7 +813,6 @@ private[analytics] trait StatsCausal {
       .withColumn("nb", sum(col("cb")).over(wTot))
       .withColumn("gap", lead(col("x"), 1).over(wAll) - col("x"))
     def d(c: Column) = c.cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val m = stepped.agg(
       max(col("na")).as("n_a"), max(col("nb")).as("n_b"),
       min(col("x")).as("xmin"), max(col("x")).as("xmax"),
@@ -887,7 +872,6 @@ private[analytics] trait StatsCausal {
       sum(col("y") * col("y")).as("rsyy"),
       sum(col("x") * col("y")).as("rsxy"))
     def d(c: Column) = c.cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val n = d(col("n"))
     def pearson(sx: Column, sy: Column, sxx: Column, syy: Column,
                 sxy: Column): Column =

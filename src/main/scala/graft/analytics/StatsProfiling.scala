@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.Sampling
+import graft.functions.CleanFns.r6
 
 /** StatsAnalytics, part 1 of 4 (mixed into the StatsAnalytics object;
   * split per VERDICT r10 item 7, zero behavior change): data-quality
@@ -329,7 +330,6 @@ private[analytics] trait StatsProfiling {
       .select(posexplode(col("qs")).as(Seq("i", "qa")))
     val b = m.filter(col("variant") === 1)
       .select(posexplode(col("qs")).as(Seq("i", "qb")))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     a.join(b, Seq("i"))
       .select(((col("i") + 1) * 10).cast("bigint").as("pct"),
         r6(col("qa")).as("q_a"), r6(col("qb")).as("q_b"),
@@ -367,7 +367,6 @@ private[analytics] trait StatsProfiling {
       cSum(col("variant") === 0, col("x") * col("x")).as("ss_a"),
       cSum(col("variant") === 1, col("x") * col("x")).as("ss_b"))
     def d(name: String) = col(name).cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val meanA = d("s_a") / d("n_a")
     val meanB = d("s_b") / d("n_b")
     val varA = (d("ss_a") - d("s_a") * d("s_a") / d("n_a")) /
@@ -405,7 +404,6 @@ private[analytics] trait StatsProfiling {
       dsum(col("y")).as("sy"), dsum(col("x") * col("x")).as("sxx"),
       dsum(col("x") * col("y")).as("sxy"),
       dsum(col("y") * col("y")).as("syy"))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val n = col("n").cast("double")
     val mx = col("sx") / n
     val my = col("sy") / n

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.Sampling
+import graft.functions.CleanFns.r6
 
 /** StatsAnalytics, part 2 of 4: daily-series analytics and classical
   * tests - ewmaDaily .. stalenessReport. */
@@ -142,7 +143,6 @@ private[analytics] trait StatsSeries {
       .groupBy(col("n"))
       .agg(count(lit(1)).as("n_lags"),
         sum(col("term")).cast("double").as("s"))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     // χ²(7) 95th percentile = 14.067140 (literal; both engines compare
     // the same constant rather than evaluating a CDF)
     val crit = if (maxLag == 7) 14.06714 else Double.NaN
@@ -170,7 +170,6 @@ private[analytics] trait StatsSeries {
     val wPrev = Window.orderBy("t")
       .rowsBetween(Window.unboundedPreceding, -1)
     val total = perT.agg(sum(col("d") + col("c")).as("n_total"))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val hTerm = when(col("d") > 0L,
       (col("d").cast("double") / col("n_risk").cast("double"))
         .cast("decimal(28,12)"))
@@ -214,7 +213,6 @@ private[analytics] trait StatsSeries {
       .filter(col("yl").isNotNull)
     def dec(c: Column) = c.cast("decimal(38,12)")
     def d(c: Column) = c.cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val m0 = rows.agg(count(lit(1)).as("n"),
       sum(dec(col("y"))).cast("double").as("sy"),
       sum(dec(col("yl"))).cast("double").as("su"),
@@ -281,7 +279,6 @@ private[analytics] trait StatsSeries {
         col("n"))
       .pinned() // every period arm folds it
     def dec(c: Column) = c.cast("decimal(38,12)")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val arms = periods.map { p =>
       def trig(table: Int => Double): Column =
         (1 until p).foldLeft(lit(table(0))) { (acc, r) =>
@@ -328,7 +325,6 @@ private[analytics] trait StatsSeries {
     val wk = trended.groupBy("wd")
       .agg((sum(col("det").cast("decimal(28,12)")).cast("double") /
         count(lit(1))).as("seasonal"))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     trended.join(broadcast(wk), Seq("wd"))
       .select(col("d"), col("v"),
         r6(col("trend")).as("trend"),
@@ -350,7 +346,6 @@ private[analytics] trait StatsSeries {
     def at(k: Int) = max(when(col("lag") === k, col("acf")))
     val m = a.agg(at(1).as("r1"), at(2).as("r2"), at(3).as("r3"),
       max(col("n_pairs") + col("lag")).as("n_days"))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val p11 = col("r1")
     val den2 = lit(1.0) - col("r1") * col("r1")
     val p22 = when(den2 =!= lit(0.0),
@@ -527,11 +522,10 @@ private[analytics] trait StatsSeries {
     byDecile.crossJoin(tot)
       .select(col("decile"), col("n_customers"),
         round(col("dspend"), 2).cast("double").as("spend"),
-        (floor(sum(col("dspend"))
+        r6(sum(col("dspend"))
             .over(Window.orderBy("decile")
               .rowsBetween(Window.unboundedPreceding, 0))
-            .cast("double") / col("total").cast("double")
-          * lit(1000000.0) + lit(0.5)) / lit(1000000.0)).as("cum_share"))
+            .cast("double") / col("total").cast("double")).as("cum_share"))
       .orderBy("decile")
   }
 
@@ -567,11 +561,10 @@ private[analytics] trait StatsSeries {
     byDecile.crossJoin(broadcast(tot))
       .select(col("decile"), col("n_customers"),
         round(col("dspend"), 2).cast("double").as("spend"),
-        (floor(sum(col("dspend"))
+        r6(sum(col("dspend"))
             .over(Window.orderBy("decile")
               .rowsBetween(Window.unboundedPreceding, 0))
-            .cast("double") / col("total").cast("double")
-          * lit(1000000.0) + lit(0.5)) / lit(1000000.0)).as("cum_share"))
+            .cast("double") / col("total").cast("double")).as("cum_share"))
       .orderBy("decile")
   }
 
@@ -589,8 +582,6 @@ private[analytics] trait StatsSeries {
     val daily = ev.filter(col("ts").isNotNull && col("event_type").isNotNull)
       .groupBy(col("event_type"), to_date(col("ts")).as("d"))
       .agg(count(lit(1)).as("c"))
-    def r6(c: Column) =
-      floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val m = daily.groupBy("event_type")
       .agg(count(lit(1)).as("n_days"), sum(col("c")).as("sc"),
         sum(col("c") * col("c")).as("scc"))
@@ -891,7 +882,6 @@ private[analytics] trait StatsSeries {
         .cast("decimal(28,12)").as("l"))
       .agg(sum(col("l")).cast("double").as("sll"),
         count(lit(1)).as("n2"))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     fitted.crossJoin(broadcast(ll))
       .select(col("n"), r6(col("p1")).as("pi1"),
         r6(col("mu1")).as("mu1"), r6(col("s1")).as("sigma1"),
@@ -1050,9 +1040,8 @@ private[analytics] trait StatsSeries {
     weekly.select(col("week"), col("rev"), prev.as("prev"))
       .select(col("week"),
         round(col("rev"), 2).cast("double").as("revenue"),
-        (floor((col("rev").cast("double") - col("prev").cast("double")) /
-          col("prev").cast("double") * lit(1000000.0) + lit(0.5))
-          / lit(1000000.0)).as("wow_growth"))
+        r6((col("rev").cast("double") - col("prev").cast("double")) /
+          col("prev").cast("double")).as("wow_growth"))
       .orderBy("week")
   }
 
@@ -1126,7 +1115,6 @@ private[analytics] trait StatsSeries {
       cSum(col("variant") === 0, col("value") * col("value")).as("ss_a"),
       cSum(col("variant") === 1, col("value") * col("value")).as("ss_b"))
     def d(name: String) = col(name).cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val meanA = d("s_a") / d("n_a")
     val meanB = d("s_b") / d("n_b")
     val varA = (d("ss_a") - d("s_a") * d("s_a") / d("n_a")) /
@@ -1179,7 +1167,6 @@ private[analytics] trait StatsSeries {
         sum(term.cast("decimal(28,12)")).as("ts"))
       .withColumn("tvd",
         lit(0.5) * (lit(1.0) + col("ts").cast("double")))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     perGroup.agg(count(lit(1)).as("n_groups"),
         r6(max(col("tvd"))).as("max_tvd"),
         sum(when(col("tvd") > tMax, 1L).otherwise(0L)).as("n_wide_groups"),

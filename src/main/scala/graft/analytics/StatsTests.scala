@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.Sampling
+import graft.functions.CleanFns.r6
 
 /** StatsAnalytics, part 4 of 4: rank correlations, distribution tests
   * and tail fits - orderBreadth memo .. ebShrinkage. */
@@ -74,7 +75,6 @@ private[analytics] trait StatsTests {
         .as(s"t_$key"),
         sum(col("t")).as(s"n_$key"))
     def d(c: Column) = c.cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     cd.crossJoin(broadcast(ties("x"))).crossJoin(broadcast(ties("y")))
       .select(col("n_x").as("n_customers"),
         col("nc_sum").cast("bigint").as("n_concordant"),
@@ -115,7 +115,6 @@ private[analytics] trait StatsTests {
     val glob = seg.agg(sum(col("n")).as("n_all"),
       sum(col("sx")).as("x_all"), sum(col("sxlnx")).as("xlnx_all"))
     val j = seg.crossJoin(broadcast(glob))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val muG = d(col("sx")) / d(col("n"))
     val mu = d(col("x_all")) / d(col("n_all"))
     val share = d(col("sx")) / d(col("x_all"))
@@ -171,7 +170,6 @@ private[analytics] trait StatsTests {
       sum((lit(1) - col("s")).cast("long")).as("n_below"),
       sum(col("brk").cast("long")).as("n_runs"))
     def d(c: Column) = c.cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val n1 = d(col("n_above")); val n2 = d(col("n_below"))
     val n = n1 + n2
     val mu = lit(2.0) * n1 * n2 / n + lit(1.0)
@@ -244,7 +242,6 @@ private[analytics] trait StatsTests {
         sum(dec(col("lx") * col("lx"))).cast("double").as("sxx"),
         sum(dec(col("lx") * col("ly"))).cast("double").as("sxy"))
     def d(c: Column) = c.cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val n = daily.agg(count(lit(1)).as("n_days"))
     def rsAt(w: Int) = max(when(col("w") === w, col("rs")))
     val wide = rs.agg(rsAt(sizes(0)).as("rs_a"), rsAt(sizes(1)).as("rs_b"),
@@ -289,7 +286,6 @@ private[analytics] trait StatsTests {
         when(col("sigma") > 0.0, (col("v") - col("mu")) / col("sigma"))
           .otherwise(lit(0.0)).as("z"))
     val bp = 0.6744897501960817
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     z.groupBy(col("segment"))
       .agg(count(lit(1)).as("n_days"),
         (sum(dec(col("z"))).cast("double") / count(lit(1))).as("paa_raw"))
@@ -335,7 +331,6 @@ private[analytics] trait StatsTests {
       .groupBy(col("n_all"), col("k"), col("r"))
       .agg((sum(col("term")).cast("double") +
         (d(col("n_all")) - sum(col("e")).cast("double"))).as("chi2"))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     m.select(col("n_all").as("n"), col("k").as("n_types"),
       col("r").as("n_dows"), r6(col("chi2")).as("chi2"),
       r6(sqrt(col("chi2") / (d(col("n_all")) *
@@ -370,7 +365,6 @@ private[analytics] trait StatsTests {
       .select(col("d"), (col("x") - col("mx")).as("cx"),
         (col("y") - col("my")).as("cy"))
     val w = Window.orderBy("d")
-    def r6(cc: Column) = floor(cc * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     // All 2·maxLag+1 arms fold in ONE window pass + ONE aggregate (the
     // previous per-lag union re-ran the day window and a global agg 15
     // times). k>0 → y shifted forward (lead), k<0 → explicit lag keeps
@@ -429,7 +423,6 @@ private[analytics] trait StatsTests {
       .withColumn("grp", col("rn") - row_number().over(Window.orderBy("rn")))
       .groupBy("grp").agg(count(lit(1)).as("len"))
       .agg(coalesce(max(col("len")), lit(0L)).as("max_underwater_days"))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val worst = dd
       .agg(count(lit(1)).as("n_days"),
         round(max(col("dd")), 2).as("max_drawdown"),
@@ -491,7 +484,6 @@ private[analytics] trait StatsTests {
         exp(theta * theta * lit(tau) /
           (lit(2.0) * sig2 * (sig2 + lit(tau)))))
       .otherwise(lit(1.0))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val scored = cum
       .withColumn("lambda", lam)
       .withColumn("p_av", r6(least(lit(1.0),
@@ -531,7 +523,6 @@ private[analytics] trait StatsTests {
       .withColumn("fc_combo",
         (col("fc_naive") + col("fc_snaive") + col("fc_ma7")) / lit(3.0))
       .pinned() // |days| rows; four scoring consumers
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     def report(fcCol: String, name: String): DataFrame = {
       val err = col("x") - col(fcCol)
       base.agg(count(lit(1)).as("n_days"),
@@ -584,7 +575,6 @@ private[analytics] trait StatsTests {
     val tot = cells.groupBy("feature")
       .agg(sum(col("goods")).as("g_tot"), sum(col("bads")).as("b_tot"))
     def d(c: Column) = c.cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val woe = log(((d(col("goods")) + lit(0.5)) / d(col("g_tot"))) /
       ((d(col("bads")) + lit(0.5)) / d(col("b_tot"))))
     val ivTerm = (d(col("goods")) / d(col("g_tot")) -
@@ -637,7 +627,6 @@ private[analytics] trait StatsTests {
         .cast("double").as("sy_t"),
       sum(dec(when(col("t") === 0, col("y")).otherwise(lit(0.0))))
         .cast("double").as("sy_c"))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     agg.select(col("n_units"), col("n_treated"),
       r6(col("sy_t") / col("n_treated").cast("double") -
         col("sy_c") / (col("n_units") - col("n_treated")).cast("double"))
@@ -690,7 +679,6 @@ private[analytics] trait StatsTests {
         col("s11"), col("syy")))
       .withColumn("r2y", corr(col("s2y"), col("s2"), col("sy"),
         col("s22"), col("syy")))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     lambdas.map { lam =>
       val opl = lit(1.0 + lam)
       val det = opl * opl - col("r12") * col("r12")
@@ -717,7 +705,6 @@ private[analytics] trait StatsTests {
   def hillTail(orders: DataFrame, k: Int = 100): DataFrame = {
     val top = orders.select(col("o_totalprice").cast("double").as("x"))
       .orderBy(col("x").desc).limit(k + 1)
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     top.agg(sum(log(col("x")).cast("decimal(28,12)")).cast("double")
           .as("s"),
         min(col("x")).as("xb"))
@@ -754,7 +741,6 @@ private[analytics] trait StatsTests {
     val n = (k + 1).toLong
     def dec(c: Column) = c.cast("decimal(28,12)")
     def d(c: Column) = c.cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val ranked = top.crossJoin(broadcast(u))
       .select(col("u"), (col("x") - col("u")).as("y"))
       .withColumn("r", row_number().over(Window.orderBy(col("y")))
@@ -812,7 +798,6 @@ private[analytics] trait StatsTests {
     val ties = census.agg(
       sum(col("t") * col("t") * col("t") - col("t")).as("tsum"))
     def d(c: Column) = c.cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val m = groups.agg(sum(col("n_g")).as("n"),
         count(lit(1)).as("n_groups"),
         sum((d(col("r_g")) * d(col("r_g")) / d(col("n_g")))
@@ -909,7 +894,6 @@ private[analytics] trait StatsTests {
       .agg(sum(col("n_g")).as("n"), count(lit(1)).as("k"),
         sum(col("ssw_t")).cast("double").as("ssw"))
       .select((col("ssw") / d(col("n") - col("k"))).as("msw"))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val a = gstats.select(col("g").as("g_a"), col("n_g").as("n_a"),
       col("s_g").as("s_a"))
     val b = gstats.select(col("g").as("g_b"), col("n_g").as("n_b"),
@@ -944,7 +928,6 @@ private[analytics] trait StatsTests {
           .as("ssb_t"),
         dec(col("ss_g") - col("s_g") * col("s_g") / d(col("n_g")))
           .as("ssw_t"))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val m = terms.groupBy("n", "k")
       .agg(sum(col("ssb_t")).cast("double").as("ssb"),
         sum(col("ssw_t")).cast("double").as("ssw"))
@@ -984,7 +967,6 @@ private[analytics] trait StatsTests {
       .select(col("g"), col("n"), slope.as("slope_g"))
     val pooled = sums(base.groupBy())
       .select(slope.as("slope_pooled"))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     perG.crossJoin(broadcast(pooled))
       .select(col("g").as("stratum"), col("n"),
         r6(col("slope_g")).as("slope_stratum"),
@@ -1026,7 +1008,6 @@ private[analytics] trait StatsTests {
     val prior = mom.select(
       when(v > lit(0.0) && mm > lit(0.0), mu * mm).as("alpha"),
       when(v > lit(0.0) && mm > lit(0.0), (lit(1.0) - mu) * mm).as("beta"))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val shrunk = when(col("alpha").isNotNull,
       (col("x").cast("double") + col("alpha")) /
         (col("n").cast("double") + col("alpha") + col("beta")))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ext.TextFns._
+import graft.functions.CleanFns.r6
 
 /** Corpus-governance operators for a large-scale training-data pipeline —
   * the per-domain capping / blocklist gating / vocabulary-coverage controls
@@ -154,7 +155,6 @@ object Curation {
     val p = col("n").cast("double") / col("n_source").cast("double")
     val q = col("ct").cast("double") / col("n_corpus").cast("double")
     def dc(c: Column) = c.cast("decimal(28,12)")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val ln2 = DistanceTables.ln2
     val folds = st.join(broadcast(corpus), Seq("token"))
       .join(broadcast(perSource), Seq("source"))
@@ -197,7 +197,6 @@ object Curation {
       .getOrElse(docs.select(col("source"),
           explode(tokens(col("text"))).as("token"))
         .groupBy("source", "token").agg(count(lit(1)).as("n")))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val m = st.groupBy("source")
       .agg(sum(col("n")).as("n_tokens"),
         count(lit(1)).as("vocab"),
@@ -256,7 +255,6 @@ object Curation {
       .crossJoin(broadcast(total))
     def d(c: Column) = c.cast("double")
     def dz(c: Column) = c.cast("decimal(28,12)")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     // lower bound max(k, n_s − (n_tot − kk)): below it the second
     // lchoose would see n_s − i > n_tot − kk, i.e. more non-term draws
     // than non-term tokens exist — exactly-zero-probability terms whose
@@ -305,9 +303,8 @@ object Curation {
       .agg(count(lit(1)).as("n_candidates"),
         sum(col("ok")).as("n_luhn_valid"))
       .withColumn("valid_rate",
-        floor(col("n_luhn_valid").cast("double") /
-          greatest(col("n_candidates"), lit(1L)).cast("double") *
-          lit(1000000.0) + lit(0.5)) / lit(1000000.0))
+        r6(col("n_luhn_valid").cast("double") /
+          greatest(col("n_candidates"), lit(1L)).cast("double")))
       .orderBy("source")
   }
 
@@ -330,7 +327,6 @@ object Curation {
                  tfOpt: Option[DataFrame] = None): DataFrame = {
     val kl = sourceKL(docs, tfOpt)
     val tot = kl.agg(sum(col("n_tokens")).as("n_total"))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val base = kl.crossJoin(broadcast(tot))
       .select(col("source"), col("n_tokens"),
         col("kl_divergence").as("excess"),
@@ -541,8 +537,6 @@ object Curation {
     * ratio is exact-input double arithmetic. */
   def essReport(docs: DataFrame): DataFrame = {
     val w = least(lit(1250L) * col("n_chars"), lit(1000000L))
-    def r6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     docs.select(col("source"), w.as("w"))
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"), sum(col("w")).as("sw"),
@@ -579,8 +573,6 @@ object Curation {
     val m = base.agg(aggs.head, aggs.tail: _*)
       .pinned() // five cutoff rows re-read ONE aggregated row
     def d(c: org.apache.spark.sql.Column) = c.cast("double")
-    def r6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     cutoffs.map { c =>
       m.select(lit(c.toLong).as("cutoff"),
         col(s"kept_$c").as("n_kept"),
@@ -618,7 +610,6 @@ object Curation {
       sum(dec(col("n_docs") * col("sigma"))).cast("double").as("w_tot"),
       sum(col("n_docs")).as("n_tot"))
     def d(c: Column) = c.cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val w = d(col("n_docs")) * col("sigma") / col("w_tot")
     per.crossJoin(broadcast(tot))
       .select(col("source"), col("n_docs"), r6(col("sigma")).as("sigma"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import TextFns._
+import graft.functions.CleanFns.r6
 
 /** Training-data deduplication suite (beyond-parity; SURVEY.md §7.5):
   * exact, n-gram Jaccard, MinHash+LSH, SimHash — all over `documents`.
@@ -42,8 +43,6 @@ object DedupExt {
       .pinned() // train set + both held-out splits read it
     val trainFps = fp.filter(col("split") === "train")
       .select(col("fp")).distinct()
-    def r6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     Seq("test", "val").map { s =>
       val part = fp.filter(col("split") === s)
       val cont = part.join(trainFps, Seq("fp"), "left_semi")
@@ -316,8 +315,6 @@ object DedupExt {
       col("p_name").as("cand_name"),
       substring_index(col("p_name"), " ", 1).as("block_key"))
       .repartition(parts.sparkSession.sessionState.conf.numShufflePartitions)
-    def r6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val scored = cands.join(broadcast(probes),
         col("block_key") === col("pb_key") &&
           lit(2) * least(length(col("cand_name")),
@@ -522,8 +519,6 @@ object DedupExt {
     val nearDup = simhashCandidates(docs, maxDist)
       .select(col("doc_id_b").as("doc_id")).distinct()
       .withColumn("is_near", lit(1))
-    def r6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     docs.select(col("doc_id"), col("source"))
       .join(exactDup, Seq("doc_id"), "left")
       .join(nearDup, Seq("doc_id"), "left")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import TextFns._
+import graft.functions.CleanFns.r6
 
 /** Model/data evaluation operators for training-data pipelines: ranking
   * quality (Mann-Whitney AUC), probability calibration (reliability /
@@ -55,7 +56,6 @@ object EvalOps {
     val m = col("__st.hits_en")
     val sri = when(n === 0L, lit(0L))
       .otherwise(floor(lit(10000.0) * m / n + lit(0.5)).cast("long"))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     staged.select(col("doc_id"), sri.as("sri"))
       .withColumn("margin", abs(col("sri") - lit(5000L)))
       .orderBy(col("margin"), col("doc_id"))
@@ -81,7 +81,6 @@ object EvalOps {
     val tot = census.agg(sum(col("n_s")).as("n_docs"),
       sum(col("pos_s")).as("n_pos"))
     def d(c: Column) = c.cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     census
       .withColumn("cum_n", sum(col("n_s")).over(wc))
       .withColumn("cum_pos", sum(col("pos_s")).over(wc))
@@ -195,7 +194,6 @@ object EvalOps {
         (col("p") + col("p0")) / lit(2.0))
         .cast("decimal(28,12)").as("a"))
       .agg(sum(col("a")).cast("double").as("auc_pr"))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     tot.crossJoin(broadcast(area))
       .select(col("n_docs"), col("n_pos"), col("n_blocks"),
         r6(col("auc_pr")).as("pr_auc"))
@@ -237,7 +235,6 @@ object EvalOps {
       .agg(sum(col("rel_t")).cast("double").as("rel_s"),
         sum(col("res_t")).cast("double").as("res_s"),
         sum(col("wbv_t")).cast("double").as("wbv_s"))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val n = d(col("n"))
     val rel = col("rel_s") / n
     val res = col("res_s") / n
@@ -465,8 +462,6 @@ object EvalOps {
       .rowsBetween(Window.unboundedPreceding, 0)
     val fitted = pairs.withColumn("mn", min(col("a")).over(tailMin))
       .groupBy(col("k").as("bin")).agg(max(col("mn")).as("iso"))
-    def r6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     per.join(fitted, Seq("bin"))
       .select(col("bin"), col("n"), col("n_pos"),
         r6(col("n_pos").cast("double") / col("n").cast("double"))
@@ -573,8 +568,8 @@ object EvalOps {
         col("other") === col("target"), 1).otherwise(0)).as("hit"))
     perOrder.agg(count(lit(1)).as("n_eval"), sum(col("hit")).as("n_hits"))
       .select(col("n_eval"), col("n_hits"),
-        (floor(col("n_hits").cast("double") / col("n_eval").cast("double")
-          * lit(1000000.0) + lit(0.5)) / lit(1000000.0)).as("hit_rate"))
+        r6(col("n_hits").cast("double") / col("n_eval").cast("double"))
+          .as("hit_rate"))
   }
 
   /** Bradley–Terry preference-strength fitting (Bradley & Terry 1952)
@@ -832,8 +827,6 @@ object EvalOps {
       max(col("cum_pos")).as("pos_total"))
     val deciles = docs.sparkSession.range(1, 11)
       .select(col("id").as("k"))
-    def r6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     deciles.crossJoin(broadcast(tot))
       .join(cum, col("cum_n") * 10 >= col("k") * col("n_total"))
       .groupBy("k", "n_total", "pos_total")
@@ -875,8 +868,6 @@ object EvalOps {
       sum(col("c")).as("total_slots"))
     val nSources = recs.select(col("item")).distinct()
       .agg(count(lit(1)).as("n_items_with_recs"))
-    def r6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     tot.crossJoin(broadcast(catalog))
       .crossJoin(broadcast(head))
       .crossJoin(broadcast(nSources))
@@ -924,7 +915,6 @@ object EvalOps {
         sum(dec(col("x2"))).cast("double").as("f"))
     val det = (col("a") + lit(lambda)) * (col("dd") + lit(lambda)) -
       col("b") * col("b")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     m.select(col("cust"), col("n_items"),
       r6(((col("dd") + lit(lambda)) * col("e") - col("b") * col("f")) /
         det).as("w1"),
@@ -967,8 +957,6 @@ object EvalOps {
           col("n_part").cast("double")) / ln2))
         .cast("decimal(28,12)").as("e"))
       .agg(sum(col("e")).cast("double").as("entropy"))
-    def r6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val meanInfo = col("si") / col("n_slots").cast("double")
     recInfo.crossJoin(broadcast(ent))
       .select(col("n_slots"),
@@ -1008,7 +996,6 @@ object EvalOps {
       cell(1, 1).as("n11"), cell(0, 0).as("n00"),
       cell(1, 0).as("n10"), cell(0, 1).as("n01"))
     def d(c: Column) = c.cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val n = d(col("n"))
     val po = (d(col("n11")) + d(col("n00"))) / n
     val pe = ((d(col("n11")) + d(col("n10"))) *
@@ -1035,7 +1022,6 @@ object EvalOps {
       sum(col("n1") * col("n1") +
         (lit(3L) - col("n1")) * (lit(3L) - col("n1"))).as("sq"))
     def d(c: Column) = c.cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val n = d(col("n"))
     val pBar = (d(col("sq")) - lit(3.0) * n) / (lit(6.0) * n)
     val p1 = d(col("s1")) / (lit(3.0) * n)

@@ -4,6 +4,7 @@ import graft.Pins._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.CleanFns.r6
 
 /** Approximate-nearest-neighbor suite over the `embeddings` fixture
   * (ArrayType(FloatType), dim 64).
@@ -551,7 +552,6 @@ object Similarity {
     graft.plans.VectorOps.register(emb.sparkSession)
     val exact = embeddingNearDup(emb, threshold)
       .agg(count(lit(1)).as("n_exact_pairs"))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val arms = bitsList.map { nb =>
       val bucketed = emb.join(lshBuckets(emb, nb), Seq("vec_id"))
         .select(col("vec_id"), col("embedding"), col("bucket"),
@@ -1025,7 +1025,6 @@ object Similarity {
       .withColumn("ap", when(col("denom") > 0,
         col("ap_num").cast("double") / col("denom").cast("double"))
         .otherwise(lit(0.0)))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     perQuery.agg(count(lit(1)).as("n_queries"),
       sum(when(col("n_hits") > 0, 1L).otherwise(0L)).as("n_with_hit"),
       r6(sum(col("ap").cast("decimal(28,12)")).cast("double") /
@@ -1121,7 +1120,6 @@ object Similarity {
       .pinned()
     val e2 = topEigen(deflated, spark, dim, iters)
       .select(col("j"), col("vj").as("vj2"), col("nrm").as("nrm2"))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     e1.join(e2, Seq("j"))
       .select(col("j").cast("bigint").as("dim_id"),
         round(col("vj"), 6).as("loading_1"),
@@ -1297,7 +1295,6 @@ object Similarity {
       sum(dec(col("sx") * col("sx"))).cast("double").as("ssx"),
       sum(dec(col("su") * col("su"))).cast("double").as("ssu"))
     def d(c: Column) = c.cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val n = d(col("n"))
     scalars.crossJoin(broadcast(vec))
       .select(col("n").as("n_vectors"), lit(dim.toLong).as("dim"),
@@ -1347,7 +1344,6 @@ object Similarity {
       .select(dec((col("sxa") / d(col("na")) - col("sxb") / d(col("nb")))
         * (col("sxa") / d(col("na")) - col("sxb") / d(col("nb"))))
         .as("t"), col("na"), col("nb"), col("sna"), col("snb"))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     mmd.groupBy("na", "nb", "sna", "snb")
       .agg(sum(col("t")).cast("double").as("mmd2"))
       .select(col("na").as("n_a"), col("nb").as("n_b"),
@@ -1393,7 +1389,6 @@ object Similarity {
         (col("g") / d(col("n")) -
           (col("si") / d(col("n"))) * (col("sj") / d(col("n"))))
           .as("c"))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     cells.agg(
         sum(when(col("i") === col("j"), dec(col("c")))
           .otherwise(lit(null).cast("decimal(38,12)"))).cast("double")
@@ -1450,7 +1445,6 @@ object Similarity {
       .agg(sum(dec((d(col("n")) / d(col("nn"))) *
         log(d(col("n")) * d(col("nn")) /
           (d(col("nc")) * d(col("nl")))))).cast("double").as("mi"))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     tot.crossJoin(broadcast(purity)).crossJoin(broadcast(hc))
       .crossJoin(broadcast(hl)).crossJoin(broadcast(mi))
       .select(col("nn").as("n_vectors"),
@@ -1497,7 +1491,6 @@ object Similarity {
         col("best.nrm").as("nrm"))
     def dz(c: Column) = c.cast("decimal(38,12)")
     def d(c: Column) = c.cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     // per-(cluster, dim) coordinate sums + per-cluster scalar moments
     val cd = assigned
       .select(col("c"), col("nrm"), posexplode(col("e")).as(Seq("i", "xi")))
@@ -1602,7 +1595,6 @@ object Similarity {
         lit(1e12)
     def dec(c: Column) = c.cast("decimal(38,12)")
     def d(c: Column) = c.cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val dimStats = ex.groupBy("i")
       .agg(count(lit(1)).as("nd"), slSum(col("xi")).as("sx"),
         slSum(col("xi") * col("xi")).as("sxx"))
@@ -1686,7 +1678,6 @@ object Similarity {
       count(lit(1)).as("kk"))
     def d(c: Column) = c.cast("double")
     def dec(c: Column) = c.cast("decimal(28,12)")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val pq = cont.crossJoin(broadcast(tot))
       .select(
         ((d(col("n0")) + lit(1.0)) / (d(col("nn0")) + d(col("kk"))))
@@ -1791,7 +1782,6 @@ object Similarity {
           .as(s"den_$key"))
     val fwd = side("ida", "idb")
     val bwd = side("idb", "ida")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     fwd.join(bwd,
         fwd("best_idb") === bwd("idb") && bwd("best_ida") === fwd("ida"))
       .select(col("ida").as("src_id"), col("idb").as("dst_id"),
@@ -1848,7 +1838,6 @@ object Similarity {
     val audit = exactPairs.agg(count(lit(1)).as("n_exact_pairs"))
       .crossJoin(mined.join(exactPairs, Seq("src_id", "dst_id"),
         "left_semi").agg(count(lit(1)).as("n_hits")))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     mined.crossJoin(broadcast(audit))
       .select(col("src_id"), col("dst_id"), col("sim"), col("margin"),
         col("n_exact_pairs"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import TextFns._
+import graft.functions.CleanFns.r6
 
 /** Text analysis for training-data pipelines: quality scoring, language ID,
   * token counting, fingerprinting. Per-row projections only — no shuffles,
@@ -65,7 +66,6 @@ object TextAnalysis {
     * one-row corpus-size frame — the hand-traceable core. */
   private[graft] def termBurstinessOf(docTf: DataFrame, nDocs: DataFrame,
                                       minDf: Long, k: Int): DataFrame = {
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val stats = docTf.groupBy("term")
       .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"))
       .filter(col("df") >= minDf)
@@ -106,7 +106,6 @@ object TextAnalysis {
       .filter(col("lang") < col("lang_b"))
       .groupBy(col("lang").as("lang_a"), col("lang_b"))
       .agg(count(lit(1)).as("n_shared"))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     inter
       .join(broadcast(sizes.select(col("lang").as("lang_a"),
         col("v").as("v_a"))), Seq("lang_a"))
@@ -183,7 +182,6 @@ object TextAnalysis {
       ((d(col("m")) * col("stv") - col("st") * col("sv")) /
         (d(col("m")) * col("stt") - col("st") * col("st"))) *
         (col("st") / d(col("m"))))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     curve.crossJoin(broadcast(
         ols.select(r6(beta).as("heaps_beta"), r6(kk).as("heaps_k"))))
       .select(col("bucket"), col("n_tokens"), col("new_terms"),
@@ -297,9 +295,8 @@ object TextAnalysis {
         count_distinct(when(col("is_dup") === 1L, col("h")))
           .as("n_dup_spans"))
       .withColumn("dup_ratio",
-        floor(col("n_dup_windows").cast("double") /
-          col("n_windows").cast("double") * lit(1000000.0) + lit(0.5))
-          / lit(1000000.0))
+        r6(col("n_dup_windows").cast("double") /
+          col("n_windows").cast("double")))
       .orderBy("doc_id")
   }
 
@@ -518,7 +515,6 @@ object TextAnalysis {
       .agg(sqrt(sum(dec(col("w") * col("w"))).cast("double")).as("nrm"))
     val wn = posts.join(norms, "doc_id")
       .select(col("term"), col("doc_id"), (col("w") / col("nrm")).as("wn"))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     wn.join(wn.select(col("term"), col("doc_id").as("doc_b"),
         col("wn").as("wn_b")), Seq("term"))
       .filter(col("doc_id") < col("doc_b"))
@@ -800,7 +796,6 @@ object TextAnalysis {
     * aggregates map-side combine; nothing leaves doc granularity. */
   def gopherRepetition(docs: DataFrame): DataFrame = {
     graft.plans.TextSketches.register(docs.sparkSession)
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val arms = GopherThresholds.map { case (n, (thrDup, thrTop)) =>
       val census = docs
         .select(col("doc_id"),
@@ -886,7 +881,6 @@ object TextAnalysis {
       lit(discount) * col("n1p_head").cast("double") /
         col("c1").cast("double") *
         (coalesce(col("n1p_cont"), lit(0L)).cast("double") / col("bb"))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val agg = scored.agg(count(lit(1)).as("n_eval_bigrams"),
       sum(when(col("c1").isNotNull, 1L).otherwise(0L)).as("n_scored"),
       sum(when(col("c1").isNotNull,
@@ -948,7 +942,6 @@ object TextAnalysis {
     val pUni = coalesce(col("cu"), lit(0L)).cast("double") /
       greatest(col("nu"), lit(1L)).cast("double")
     val p = lit(lambda) * pCond + lit(1.0 - lambda) * pUni
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val agg = scored.agg(count(lit(1)).as("n_eval_bigrams"),
       sum(when(col("c1").isNull, 1L).otherwise(0L))
         .as("n_unseen_heads"),
@@ -980,7 +973,6 @@ object TextAnalysis {
   def charEntropy(docs: DataFrame): DataFrame = {
     graft.plans.TextSketches.register(docs.sparkSession)
     def dc(c: Column) = c.cast("decimal(28,12)")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     def armFold(n: Int, pre: String): DataFrame =
       docs.filter(col("text").isNotNull)
         .select(col("source"),
@@ -1739,7 +1731,6 @@ object TextAnalysis {
       t => t =!= ""))
     val bpe = regexp_count(col("text"),
       lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     docs.select(col("lang"), words.cast("bigint").as("w"),
         bpe.cast("bigint").as("t"),
         length(col("text")).cast("bigint").as("ch"))
@@ -1768,7 +1759,6 @@ object TextAnalysis {
       regexp_count(col("text"), lit(pat)).cast("long")
     val nChars = length(col("text")).cast("long")
     val nDigits = rc("[0-9]")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     docs.select(col("doc_id"),
         rc("https?://[^ ]+").as("n_urls"),
         rc("[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]+")
@@ -1805,7 +1795,6 @@ object TextAnalysis {
     val nSent = greatest(lit(1L),
       regexp_count(col("text"), lit("[.!?]+")).cast("long"))
     def d(c: Column) = c.cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     docs.select(col("doc_id"), nWords.as("n_words"),
         nSent.as("n_sentences"), nSyll.as("n_syllables"))
       .withColumn("flesch",
@@ -1841,7 +1830,6 @@ object TextAnalysis {
     val m2 = cells.groupBy("w2").agg(sum(col("c12")).as("c2"))
     val nTot = cells.agg(sum(col("c12")).as("nn"))
     def d(c: Column) = c.cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     def term(k: Column, row: Column, cl: Column, n: Column): Column =
       when(k > 0.0, k * log(k * n / (row * cl))).otherwise(lit(0.0))
     val n = d(col("nn"))
@@ -1878,7 +1866,6 @@ object TextAnalysis {
         floor(col("pos") / segTokens).cast("bigint").as("seg"))
       .agg(count(lit(1)).as("n_tok"), countDistinct(col("tok")).as("n_d"))
     def d(c: Column) = c.cast("double")
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val perDocSeg = segCells.groupBy("doc_id")
       .agg(count(lit(1)).as("n_segments"),
         sum((d(col("n_d")) / d(col("n_tok"))).cast("decimal(28,12)"))
@@ -1930,7 +1917,6 @@ object TextAnalysis {
     val wscore = wstats.select(col("w"),
       (col("degree").cast("double") / col("freq").cast("double"))
         .as("ws"))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     pc.filter(col("n") >= minCount)
       .select(col("phrase"), col("n"), explode(col("words")).as("w"))
       .join(broadcast(wscore), Seq("w"))

@@ -232,4 +232,13 @@ object CleanFns {
     * Spark `date_format` and DuckDB `strftime('%Y-%m-%d %H:%M:%S.%f')`). */
   def tsMicros(ts: Column): Column =
     date_format(ts, "yyyy-MM-dd HH:mm:ss.SSSSSS")
+
+  /** Half-up rounding at 6 decimals, the output contract's rule for
+    * doubles; the oracle SQL spells the same arithmetic
+    * `FLOOR(x * 1000000.0 + 0.5) / 1000000.0`. */
+  def r6(c: Column): Column =
+    floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
+
+  /** The same rule for a plain `Double` computed outside a query plan. */
+  def r6(x: Double): Double = math.floor(x * 1000000.0 + 0.5) / 1000000.0
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.CleanFns.r6
 
 /** Data-contract validation — the expectation suite a warehouse runs
   * before publishing a snapshot: referential integrity (anti-joins, which
@@ -190,8 +191,6 @@ object DataContract {
           org.apache.spark.sql.types.StringType, nullable = false),
         org.apache.spark.sql.types.StructField("parent_col",
           org.apache.spark.sql.types.StringType, nullable = false))))
-    def r6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     names.join(broadcast(counts), Seq("cid"), "left")
       .select(col("child_table"), col("child_col"),
         col("parent_table"), col("parent_col"),
@@ -287,8 +286,6 @@ object DataContract {
     * filter inside its composite DISTINCT subquery. */
   def candidateKeys(table: String, df: DataFrame,
                     combos: Seq[Seq[String]]): DataFrame = {
-    def r6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     combos.map { combo =>
       df.agg(count(lit(1)).as("n_rows"),
           countDistinct(combo.head, combo.tail: _*).as("n_distinct"))

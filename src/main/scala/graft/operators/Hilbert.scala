@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.CleanFns.r6
 
 /** Hilbert-curve sort keys — the data-clustering alternative to
   * [[ZOrder]]'s Morton interleave that lakehouse OPTIMIZE implementations
@@ -111,7 +112,6 @@ object Hilbert {
     // so the boundedness lint proves the census-bounded windows
     // structurally instead of via a growth exemption
     val g = withHilbert(g0, "xg", "yg", gridBits, "h").persist()
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     def arm(key: Column, layout: String): DataFrame = {
       val wPrev = Window.orderBy(key)
         .rowsBetween(Window.unboundedPreceding, -1)

@@ -58,10 +58,17 @@ object Upsert {
       .drop(opCol)
 
   /** Persist `df` to `path` atomically-enough for a batch engine: write to a
-    * tmp sibling then rename over. Idempotent replay = same result. */
-  def overwriteViaSwap(spark: SparkSession, df: DataFrame, path: String): Unit = {
+    * tmp sibling then rename over. Idempotent replay = same result.
+    * `partitionBy` lays the table out in one directory per value of those
+    * columns. */
+  def overwriteViaSwap(spark: SparkSession, df: DataFrame, path: String,
+                       partitionBy: Seq[String] = Nil): Unit = {
     val tmp = path + "__tmp"
-    df.write.mode("overwrite").parquet(tmp)
+    val writer = df.write.mode("overwrite")
+    // an empty partitionBy is not a no-op: it still records a (blank)
+    // partition-columns option on the write
+    (if (partitionBy.isEmpty) writer else writer.partitionBy(partitionBy: _*))
+      .parquet(tmp)
     val hconf = spark.sparkContext.hadoopConfiguration
     val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(hconf)
     val dst = new org.apache.hadoop.fs.Path(path)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.CleanFns.r6
 
 /** Z-order (Morton) interleaved sort keys — the multi-dimensional data
   * layout used by lakehouse table formats to make range predicates on
@@ -94,7 +95,6 @@ object ZOrder {
           (col("x_hi") < boxLo || col("y_hi") < boxLo).cast("long")
             .as("prune_box"),
           (col("y_hi") < boxLo).cast("long").as("prune_y"))
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val both = envelopes(col("xg"), "natural_x")
       .unionAll(envelopes(shiftright(col("z"), bucketShift), "zorder"))
     both.groupBy(col("layout"))
@@ -129,7 +129,6 @@ object ZOrder {
       .orderBy(col("bytes").desc, col("file_id"))
       .rowsBetween(org.apache.spark.sql.expressions.Window
         .unboundedPreceding, 0)
-    def r6(c: Column) = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     files
       .withColumn("cum", sum(col("bytes")).over(w))
       .withColumn("bin",

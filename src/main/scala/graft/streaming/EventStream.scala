@@ -281,11 +281,10 @@ object EventStream {
 
   private val nameCounter = new AtomicLong(0)
 
-  /** Streaming scan of the events fixture. Same dtype-adaptive `ts` handling
-    * as `graft.Tables.events` (NANOS-as-long → DIV-1000 truncation; native
-    * MICROS timestamp → pass-through); the schema is probed with a batch
-    * read — a streaming source must be given its schema up front (no
-    * inference race on a growing directory). */
+  /** Streaming scan of the events fixture. `ts` goes through the same
+    * adapter as `graft.Tables.events` (`Tables.withEventTs`); the schema is
+    * probed with a batch read — a streaming source must be given its
+    * schema up front (no inference race on a growing directory). */
   private val schemaCache =
     scala.collection.concurrent.TrieMap
       .empty[String, org.apache.spark.sql.types.StructType]
@@ -311,19 +310,7 @@ object EventStream {
     val raw = spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet")
       .parquet(sfDir)
-    schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        // same NTZ → session-zone normalization as Tables.events
-        raw.withColumn("ts", col("ts").cast("timestamp"))
-      case org.apache.spark.sql.types.TimestampType => raw
-      case other =>
-        // mirror Tables.events: an unknown third encoding fails loudly
-        throw new IllegalStateException(
-          s"events.ts arrived as unsupported dtype $other " +
-            "(expected long nanos, TIMESTAMP_NTZ micros, or TIMESTAMP)")
-    }
+    graft.Tables.withEventTs(raw, schema("ts").dataType)
   }
 
   /** A5 incrementally: watermarked keyed dedup with BOUNDED state.

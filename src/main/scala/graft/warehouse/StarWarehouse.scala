@@ -25,6 +25,9 @@ object StarWarehouse {
           val t = new Thread(r, "graft-wh-load"); t.setDaemon(true); t
         }))
 
+  /** Target bytes per output file of the range-clustered intl fact. */
+  private[warehouse] val TargetPartitionBytes: Long = 128L * 1024 * 1024
+
   private[warehouse] def async[A](body: => A): scala.concurrent.Future[A] =
     scala.concurrent.Future(body)(ec)
 
@@ -184,7 +187,8 @@ class StarWarehouse(spark: SparkSession, root: String) {
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type_id"), col("amount"), col("event_date"),
         col("event_hour"))
-    writePartitioned(resolved, "fact_events", "event_date")
+    Upsert.overwriteViaSwap(spark, resolved, path("fact_events"),
+      Seq("event_date"))
   }
 
   /** fact_international_sales upsert (S6/D1; load.py:141-219,
@@ -277,39 +281,20 @@ class StarWarehouse(spark: SparkSession, root: String) {
     // row-group zone maps prune date predicates just as effectively.
     // Output files sized by DATA, not by the session shuffle width
     // (guide §6, the Tables.withMinParallelism rule pointed at output):
-    // the range-cluster width is ceil(size / targetPartitionBytes) capped
-    // at the shuffle partition count, so a fixture-scale fact lands as
+    // the range-cluster width is Tables.partitionsFor at
+    // TargetPartitionBytes per file, so a fixture-scale fact lands as
     // ONE full file instead of 32 KB-sized shards (32 commit+list+reread
     // round-trips per MERGE), while a real fact still fans out to the
     // cap. Size = exact row count over the ALREADY-PINNED merge (a cheap
     // narrow job — the Catalyst estimate that survives the checkpoint is
     // a post-join/window guess, measured 1000x over actual here) times
     // the schema's default row width.
-    val targetBytes = spark.conf
-      .get("spark.graft.write.targetPartitionBytes",
-        (128L * 1024 * 1024).toString).toLong
     val rowBytes = merged.schema.map(_.dataType.defaultSize).sum + 20L
-    val nOut = ((BigInt(merged.count()) * rowBytes + targetBytes - 1)
-        / targetBytes)
-      .min(BigInt(spark.sessionState.conf.numShufflePartitions))
-      .max(BigInt(1)).toInt
+    val nOut = graft.Tables.partitionsFor(spark,
+      BigInt(merged.count()) * rowBytes, StarWarehouse.TargetPartitionBytes)
     val clustered = merged.repartitionByRange(nOut, col("date_key"))
       .sortWithinPartitions("date_key")
     Upsert.overwriteViaSwap(spark, clustered,
       path("fact_international_sales"))
-  }
-
-  /** Facts persist partitioned by their date column (partition pruning on
-    * every date predicate — the reference's B-tree date indexes), via the
-    * same write-to-tmp-then-swap as the dims. */
-  private def writePartitioned(df: DataFrame, table: String,
-                               partCol: String): Unit = {
-    val tmp = path(table) + "__tmp"
-    df.write.mode("overwrite").partitionBy(partCol).parquet(tmp)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val dst = new org.apache.hadoop.fs.Path(path(table))
-    val fs = dst.getFileSystem(hconf)
-    if (fs.exists(dst)) fs.delete(dst, true)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), dst)
   }
 }

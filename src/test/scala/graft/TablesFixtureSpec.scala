@@ -51,6 +51,14 @@ class TablesFixtureSpec extends SparkSpec {
     assert(got === "2025-01-01 00:00:00.123")
   }
 
+  test("readEventsStream adapts a long-nanos fixture to a timestamp ts") {
+    val dir = Files.createTempDirectory("graft-nanos-stream").toString
+    writeFixture(dir, col("us") * lit(1000L), LongType)
+    val df = graft.streaming.EventStream.readEventsStream(spark, dir)
+    assert(df.isStreaming)
+    assert(df.schema("ts").dataType == TimestampType)
+  }
+
   test("the real driver fixture at sf0.001 loads with a session-zone ts") {
     val df = Tables.events(spark, "/root/testdata/sf0.001")
     assert(df.count() > 0)
