@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.analytics.EventAnalytics
 import graft.ingest.JsonlIngest
 import graft.transform.CleanEvents
 import graft.warehouse.StarWarehouse
@@ -13,15 +14,38 @@ import graft.operators.Quarantine
   * traced in SURVEY.md §3.1): ingest → transform → quarantine union →
   * star-schema load → analytics exports → quality report.
   *
-  * Everything between ingest and the writes is ONE lazy DAG; actions happen
-  * only at the sinks and the metrics pass. Idempotence comes from keyed
-  * upserts + deterministic ids, exactly as in the reference (§2.9) — run
-  * the pipeline twice over the same input and the warehouse is unchanged
-  * (tested in PipelineSpec).
+  * The reference runs these strictly one after another. Here ingest and
+  * transform build one lazy DAG (the transform's metric actions already run
+  * as concurrent jobs), and the actions of the load run as a small
+  * dependency graph: every step whose inputs are ready runs at the same
+  * time, through [[Par.all]].
+  *  - Stage 1: the quarantine sink and its count, dim_users,
+  *    dim_event_types, dim_customers + dim_products, and ONE dim_dates
+  *    upsert over the events' and the intl sales' dates.
+  *  - Stage 2: fact_events and fact_international_sales, each reading its
+  *    dims back from stage 1.
+  *  - Stage 3: the six CSV exports and the two fact counts.
+  * Write-hazard rule: no two concurrent steps write one path, and no step
+  * reads a path a concurrent step writes. So each table has exactly one
+  * writer per batch (dim_dates is the one table both facts need, hence a
+  * single upsert), and the exports, which read the warehouse, start only
+  * after every warehouse write has returned.
+  *
+  * Idempotence comes from keyed upserts + deterministic ids, exactly as in
+  * the reference (§2.9) — run the pipeline twice over the same input and
+  * the warehouse is unchanged (tested in PipelineSpec).
   */
 object Pipeline {
 
   case class RunReport(metrics: Map[String, Long])
+
+  /** A step that writes and reports nothing. */
+  private def write(body: => Unit): () => Map[String, Long] =
+    () => { body; Map.empty }
+
+  /** A step that reports one count under `key`. */
+  private def countAs(key: String, df: => DataFrame): () => Map[String, Long] =
+    () => Map(key -> df.count())
 
   def run(spark: SparkSession, eventsJsonl: String, usersCsv: String,
           warehouseRoot: String, exportRoot: String,
@@ -38,41 +62,42 @@ object Pipeline {
       badIngest,
       t.bad.select(to_json(struct(t.bad.columns.map(col).toSeq: _*))
         .as("raw"), col("reason"))))
-    JsonlIngest.writeBadRecords(allBad, s"$exportRoot/bad_records")
 
-    // 4. load (D1/D2/A8, J4)
-    val wh = new StarWarehouse(spark, warehouseRoot)
-    wh.upsertDimUsers(t.cleaned)
-    wh.upsertFactEvents(t.cleaned)
-
-    // 4b. optional international-sales branch (S6; run_pipeline.py:73-79):
+    // optional international-sales branch (S6; run_pipeline.py:73-79):
     // load the canonical intl JSONL into fact_international_sales +
     // dim_customers/dim_products when the file exists, else skip silently.
-    val intlRows: Option[Long] = intlJsonl.filter(existsPath(spark, _)).map {
-      p =>
-        wh.upsertFactInternationalSales(
-          JsonlIngest.readInternationalSales(spark, p))
-        wh.read("fact_international_sales").count()
-    }
+    val intl = intlJsonl.filter(existsPath(spark, _))
+      .map(p => Seq(JsonlIngest.readInternationalSales(spark, p)))
 
-    // 5. analytics read side (A1–A4) over the warehouse → CSV (K1)
+    // 4. load (D1/D2/A8, J4): stage 1, every dim plus the quarantine sink
+    val wh = new StarWarehouse(spark, warehouseRoot)
+    val dateKeys = (t.cleaned.select(col("event_date").as("date_key")) +:
+      intl.toSeq.flatten.map(_.select(col("date_key")))).reduce(_ unionByName _)
+    val loaded = Par.all(
+      write(JsonlIngest.writeBadRecords(allBad, s"$exportRoot/bad_records")),
+      countAs("bad_records_total", allBad),
+      write(wh.upsertDimUsers(t.cleaned)),
+      write(wh.upsertDimEventTypes(t.cleaned)),
+      write(wh.upsertDimDates(dateKeys, "date_key")),
+      write(intl.foreach(wh.upsertIntlDims)))
+    // stage 2: the two fact merges
+    Par.all(() => wh.mergeFactEvents(t.cleaned),
+      () => intl.foreach(wh.mergeFactInternationalSales))
+
+    // 5. stage 3: analytics read side (A1–A4) over the warehouse → CSV (K1)
     val fact = wh.read("fact_events")
     val dimTypes = wh.read("dim_event_types")
     val joined = fact.join(broadcast(dimTypes), Seq("event_type_id"))
       .withColumnRenamed("event", "event_type")
       .withColumn("user_id", col("user_id").cast("string"))
       .withColumn("value", col("amount"))
-    Sinks.writeCsv(analyticsDau(joined), s"$exportRoot/dau")
-    Sinks.writeCsv(analyticsRevenue(joined), s"$exportRoot/revenue")
-    Sinks.writeCsv(analyticsEventCounts(joined), s"$exportRoot/event_counts")
-    Sinks.writeCsv(analyticsFunnel(joined), s"$exportRoot/funnel")
 
-    // 5b. international revenue export with the reference's missing-table
+    // international revenue export with the reference's missing-table
     // fallback (analytics.py:55-68, 139-142): if the intl fact is absent,
     // still export an empty 2-column CSV.
     val intlRev =
       if (wh.tableExists("fact_international_sales"))
-        graft.analytics.EventAnalytics.substrRevenue(
+        EventAnalytics.substrRevenue(
             wh.read("fact_international_sales"),
             col("ts"), col("gross_amt"))
           .withColumnRenamed("revenue", "intl_revenue")
@@ -83,9 +108,8 @@ object Pipeline {
             org.apache.spark.sql.types.StringType),
           org.apache.spark.sql.types.StructField("intl_revenue",
             org.apache.spark.sql.types.DoubleType))))
-    Sinks.writeCsv(intlRev, s"$exportRoot/international_revenue")
 
-    // 5c. fact preview export (run_pipeline.py:82-102): ts-ordered top-50
+    // fact preview export (run_pipeline.py:82-102): ts-ordered top-50
     // with user attributes. Scale shape: TakeOrderedAndProject the fact
     // FIRST, then semi-reduce dim_users to just the previewed users and
     // broadcast that — dim_users (user-cardinality) is never shuffled or
@@ -98,13 +122,22 @@ object Pipeline {
       .select("event_id", "ts", "user_id", "event_type_id", "amount",
         "event_date", "event_hour", "country", "signup_source")
       .orderBy(col("ts"), col("event_id"))
-    Sinks.writeCsv(preview, s"$exportRoot/fact_events_preview")
+
+    def csv(name: String, df: => DataFrame) =
+      write(Sinks.writeCsv(df, s"$exportRoot/$name"))
+    val exported = Par.all(Seq(
+      csv("dau", EventAnalytics.dau(joined)),
+      csv("revenue", EventAnalytics.revenue(joined)),
+      csv("event_counts", EventAnalytics.eventCounts(joined)),
+      csv("funnel", EventAnalytics.funnel(joined)),
+      csv("international_revenue", intlRev),
+      csv("fact_events_preview", preview),
+      countAs("fact_events_rows", fact)) ++
+      intl.map(_ => countAs("intl_sales_rows",
+        wh.read("fact_international_sales"))): _*)
 
     // 6. quality report (K3)
-    val metrics = t.metrics ++ Map(
-      "bad_records_total" -> allBad.count(),
-      "fact_events_rows" -> fact.count()) ++
-      intlRows.map("intl_sales_rows" -> _)
+    val metrics = (t.metrics +: (loaded ++ exported)).reduce(_ ++ _)
     Sinks.writeQualityReport(metrics, s"$exportRoot/quality_report.json")
     RunReport(metrics)
   }
@@ -113,15 +146,4 @@ object Pipeline {
     val hp = new org.apache.hadoop.fs.Path(p)
     hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
   }
-
-  // The four event-analytics queries over a (fact ⋈ dim) frame whose
-  // column names match the fixture-facing EventAnalytics contract.
-  private def analyticsDau(df: DataFrame): DataFrame =
-    graft.analytics.EventAnalytics.dau(df)
-  private def analyticsRevenue(df: DataFrame): DataFrame =
-    graft.analytics.EventAnalytics.revenue(df)
-  private def analyticsEventCounts(df: DataFrame): DataFrame =
-    graft.analytics.EventAnalytics.eventCounts(df)
-  private def analyticsFunnel(df: DataFrame): DataFrame =
-    graft.analytics.EventAnalytics.funnel(df)
 }

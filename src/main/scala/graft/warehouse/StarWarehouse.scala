@@ -3,6 +3,7 @@ package graft.warehouse
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.CleanFns._
+import graft.Par
 import graft.operators.{Dedup, Upsert}
 
 /** The star-schema load layer (reference: pipeline/load.py +
@@ -11,45 +12,20 @@ import graft.operators.{Dedup, Upsert}
   * under a warehouse root, partitioned by event_date (the analog of the
   * reference's B-tree date indexes, warehouse_star.sql:71-77 — gives
   * partition pruning on every date predicate at scale).
+  *
+  * A load is made of steps, each writing exactly one table through
+  * `Upsert.overwriteViaSwap`: the dims (`upsertDimUsers`,
+  * `upsertDimEventTypes`, `upsertIntlDims` — customers and products —
+  * and `upsertDimDates`) and the two fact merges (`mergeFactEvents`,
+  * `mergeFactInternationalSales`), which read their dims back from disk.
+  * `upsertFactEvents` and `upsertFactInternationalSales[Batches]` compose
+  * them: the fact's dims concurrently through [[graft.Par]], then the
+  * fact merge. `graft.Pipeline` composes the same steps across both facts
+  * so that one batch writes `dim_dates` once.
   */
 object StarWarehouse {
-  /** Small daemon pool for submitting INDEPENDENT warehouse loads as
-    * concurrent Spark jobs (Spark's scheduler is explicitly multi-thread
-    * safe; each job's stages interleave across idle cores instead of
-    * queuing behind each other's write latency). Sized to the handful of
-    * dim tables a single fact load touches. */
-  private val ec: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(4,
-        (r: Runnable) => {
-          val t = new Thread(r, "graft-wh-load"); t.setDaemon(true); t
-        }))
-
   /** Target bytes per output file of the range-clustered intl fact. */
   private[warehouse] val TargetPartitionBytes: Long = 128L * 1024 * 1024
-
-  private[warehouse] def async[A](body: => A): scala.concurrent.Future[A] =
-    scala.concurrent.Future(body)(ec)
-
-  /** Await two value-bearing loads (plus any side-effect-only ones).
-    * EVERY future is awaited to completion before the first failure
-    * rethrows — otherwise a still-running dim load would keep writing in
-    * the background after the caller observed the failure, and a retry
-    * could race that orphan write's directory swap on the same path. */
-  private[warehouse] def awaitPair[A, B](fa: scala.concurrent.Future[A],
-                                         fb: scala.concurrent.Future[B],
-                                         rest: scala.concurrent.Future[_]*)
-      : (A, B) = {
-    import scala.concurrent.Await
-    import scala.concurrent.duration.Duration
-    import scala.util.Try
-    val ra = Try(Await.result(fa, Duration.Inf))
-    val rb = Try(Await.result(fb, Duration.Inf))
-    val rr = rest.map(f => Try(Await.result(f, Duration.Inf)))
-    (ra.failed.toOption ++ rb.failed.toOption ++
-      rr.flatMap(_.failed.toOption)).headOption.foreach(throw _)
-    (ra.get, rb.get)
-  }
 }
 
 class StarWarehouse(spark: SparkSession, root: String) {
@@ -115,23 +91,17 @@ class StarWarehouse(spark: SparkSession, root: String) {
     }
   }
 
-  /** Enum dims with deterministic surrogate keys (D2), one batch per
-    * write. Multi-batch loads go through [[upsertEnumDimBatches]]. */
-  def upsertEnumDim(values: DataFrame, naturalKey: String, idCol: String,
-                    table: String): DataFrame =
-    upsertEnumDimBatches(Seq(values), naturalKey, idCol, table)
-
-  /** Fold N batches through the INSERT OR IGNORE id sequence IN ORDER
-    * (batch i+1's unseen keys extend the id range batch i finished at —
-    * identical ids to N sequential [[upsertEnumDim]] calls, because each
-    * fold step is the same merge the sequential path persists) but pay
-    * ONE write and ONE read-back instead of N of each. The folded plan
+  /** Enum dims with deterministic surrogate keys (D2). Folds N batches
+    * through the INSERT OR IGNORE id sequence IN ORDER (batch i+1's unseen
+    * keys extend the id range batch i finished at — identical ids to N
+    * one-batch calls, because each fold step is the same merge a one-batch
+    * call persists) but pays ONE write instead of N. The folded plan
     * re-evaluates earlier batches' key sets a few times (anti-join +
     * max-id broadcast per step) — enum dims are distinct-key scale, so
     * re-evaluating a tiny aggregate beats re-reading and re-writing the
     * table N−1 times on any storage. */
   def upsertEnumDimBatches(batches: Seq[DataFrame], naturalKey: String,
-                           idCol: String, table: String): DataFrame = {
+                           idCol: String, table: String): Unit = {
     val start = if (exists(table)) Some(read(table)) else None
     val merged = batches.foldLeft(start) { (acc, b) =>
       Some(mergeEnumDim(acc, b, naturalKey, idCol))
@@ -140,7 +110,6 @@ class StarWarehouse(spark: SparkSession, root: String) {
     // the right layout at any fact volume (32 shuffle-partition shards of
     // a few-hundred-row dim are pure file-creation + listing overhead).
     Upsert.overwriteViaSwap(spark, merged.coalesce(1), path(table))
-    read(table)
   }
 
   /** dim_dates (A8), INSERT OR IGNORE by date_key. */
@@ -154,19 +123,27 @@ class StarWarehouse(spark: SparkSession, root: String) {
     Upsert.overwriteViaSwap(spark, merged.coalesce(1), path("dim_dates"))
   }
 
-  /** fact_events upsert (D1, load.py:251-297): resolves event_type_id via
-    * broadcast join against the enum dim (J4), derives date/hour, keyed on
-    * event_id with latest-(ts, row-hash)-wins via the order-independent
-    * mergeLatest — replaying batches in any interleaving converges to the
-    * same fact table (§2.9; PropertySpec). Partitioned by event_date. */
+  /** dim_event_types (D2) over the cleaned events' names. */
+  def upsertDimEventTypes(cleaned: DataFrame): Unit =
+    upsertEnumDimBatches(Seq(cleaned.select(col("event"))), "event",
+      "event_type_id", "dim_event_types")
+
+  /** fact_events upsert (D1, load.py:251-297): dim_event_types and
+    * dim_dates as concurrent Spark jobs, then [[mergeFactEvents]]. */
   def upsertFactEvents(cleaned: DataFrame): Unit = {
-    // dim_event_types and dim_dates are independent loads — run them as
-    // concurrent Spark jobs (see upsertFactInternationalSales).
-    val (dimTypes, _) = StarWarehouse.awaitPair(
-      StarWarehouse.async(upsertEnumDim(cleaned.select(col("event")),
-        "event", "event_type_id", "dim_event_types")),
-      StarWarehouse.async(
-        upsertDimDates(cleaned.select(col("event_date")), "event_date")))
+    Par.all(() => upsertDimEventTypes(cleaned),
+      () => upsertDimDates(cleaned.select(col("event_date")), "event_date"))
+    mergeFactEvents(cleaned)
+  }
+
+  /** The fact_events merge alone, once dim_event_types holds every event
+    * name in `cleaned`: resolves event_type_id via broadcast join against
+    * the enum dim (J4), keyed on event_id with latest-(ts, row-hash)-wins
+    * via the order-independent mergeLatest — replaying batches in any
+    * interleaving converges to the same fact table (§2.9; PropertySpec).
+    * Partitioned by event_date. */
+  def mergeFactEvents(cleaned: DataFrame): Unit = {
+    val dimTypes = read("dim_event_types")
     val incoming = cleaned
       .select(col("event_id"), col("ts"), col("user_id"), col("event"),
         col("amount"), col("event_date"), col("event_hour"))
@@ -232,21 +209,29 @@ class StarWarehouse(spark: SparkSession, root: String) {
     * Round15OpsSpec pins batched ≡ sequential on a 2-batch overlap. */
   def upsertFactInternationalSalesBatches(batches: Seq[DataFrame]): Unit = {
     require(batches.nonEmpty, "at least one intl batch")
-    // The three dim loads touch disjoint tables and share no data
-    // dependency — submit them as CONCURRENT Spark jobs (the scheduler
-    // interleaves their small stages across idle cores) instead of paying
-    // three sequential write-job latencies.
-    val (dimCust, dimProd) = StarWarehouse.awaitPair(
-      StarWarehouse.async(upsertEnumDimBatches(
+    Par.all(() => upsertIntlDims(batches),
+      () => upsertDimDates(batches.map(_.select(col("date_key")))
+        .reduce(_ unionByName _), "date_key"))
+    mergeFactInternationalSales(batches)
+  }
+
+  /** dim_customers and dim_products, folded over `batches` in order, as
+    * concurrent Spark jobs (disjoint tables, no shared data dependency). */
+  def upsertIntlDims(batches: Seq[DataFrame]): Unit =
+    Par.all(
+      () => upsertEnumDimBatches(
         batches.map(b => b.filter(col("customer").isNotNull)
           .select(col("customer").as("customer_name"))),
-        "customer_name", "customer_id", "dim_customers")),
-      StarWarehouse.async(upsertEnumDimBatches(
+        "customer_name", "customer_id", "dim_customers"),
+      () => upsertEnumDimBatches(
         batches.map(b => b.filter(col("sku").isNotNull).select(col("sku"))),
-        "sku", "product_id", "dim_products")),
-      StarWarehouse.async(
-        upsertDimDates(batches.map(_.select(col("date_key")))
-          .reduce(_ unionByName _), "date_key")))
+        "sku", "product_id", "dim_products"))
+
+  /** The fact_international_sales merge alone, once dim_customers and
+    * dim_products hold every key in `batches` ([[upsertIntlDims]]). */
+  def mergeFactInternationalSales(batches: Seq[DataFrame]): Unit = {
+    val dimCust = read("dim_customers")
+    val dimProd = read("dim_products")
     def resolve(intl: DataFrame): DataFrame = {
       val src =
         if (intl.columns.contains("source_dataset"))

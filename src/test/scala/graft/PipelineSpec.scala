@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 /** End-to-end pipeline test over reference-shaped synthetic input
   * (mirrors /root/reference/scripts/generate_events.py:23-49: invalid event
   * types, null-ish user ids, one bad timestamp, a duplicate event_id, a
@@ -30,6 +32,17 @@ class PipelineSpec extends SparkSpec {
     Files.writeString(ep, events)
     Files.writeString(up, users)
     (ep.toString, up.toString)
+  }
+
+  /** dim_dates holds exactly one row per valid date, and no load left a
+    * `*__tmp` directory behind. */
+  private def assertDatesAndNoTmp(root: String, dates: Seq[String]): Unit = {
+    val wh = new graft.warehouse.StarWarehouse(spark, root)
+    assert(wh.read("dim_dates").collect()
+      .map(_.getAs[String]("date_key")).toSeq.sorted == dates)
+    val tmp = Files.walk(Paths.get(root)).iterator().asScala
+      .filter(_.getFileName.toString.endsWith("__tmp")).toSeq
+    assert(tmp.isEmpty, tmp.mkString(", "))
   }
 
   test("pipeline end-to-end: quarantine, dedup, star load, exports") {
@@ -64,14 +77,16 @@ class PipelineSpec extends SparkSpec {
   private def writeIntlFixture(dir: String): String = {
     // Canonical intl-sales records (the Kaggle loader's staging output,
     // kaggle_amazon_sales_loader.py:234-246): two customers, two SKUs, one
-    // duplicate sale_id (s2, later ts wins), one null-customer row that the
-    // load must skip (load.py:184-186).
+    // duplicate sale_id (s2, later ts wins), and two null-customer rows that
+    // the load must skip (load.py:184-186): s4 on a date no event has, s5
+    // on a malformed date_key.
     val intl = Seq(
       """{"sale_id":"s1","ts":"2024-03-01T12:00:00","date_key":"2024-03-01","customer":"acme","sku":"sku_a","pcs":2,"rate":10.0,"gross_amt":20.0,"currency":"INR","source_dataset":"intl.csv"}""",
       """{"sale_id":"s2","ts":"2024-03-01T12:00:00","date_key":"2024-03-01","customer":"acme","sku":"sku_b","pcs":1,"rate":5.0,"gross_amt":5.0,"currency":"INR","source_dataset":"intl.csv"}""",
       """{"sale_id":"s2","ts":"2024-03-02T12:00:00","date_key":"2024-03-02","customer":"acme","sku":"sku_b","pcs":3,"rate":5.0,"gross_amt":15.0,"currency":"INR","source_dataset":"intl.csv"}""",
       """{"sale_id":"s3","ts":"2024-03-02T13:00:00","date_key":"2024-03-02","customer":"zenith","sku":"sku_a","pcs":4,"rate":2.5,"gross_amt":10.0,"currency":"USD","source_dataset":"intl.csv"}""",
-      """{"sale_id":"s4","ts":"2024-03-02T14:00:00","date_key":"2024-03-02","customer":null,"sku":"sku_a","pcs":1,"rate":1.0,"gross_amt":1.0,"currency":"INR","source_dataset":"intl.csv"}"""
+      """{"sale_id":"s4","ts":"2024-02-29T14:00:00","date_key":"2024-02-29","customer":null,"sku":"sku_a","pcs":1,"rate":1.0,"gross_amt":1.0,"currency":"INR","source_dataset":"intl.csv"}""",
+      """{"sale_id":"s5","ts":"2024-03-02T15:00:00","date_key":"2024-13-01","customer":null,"sku":"sku_a","pcs":1,"rate":1.0,"gross_amt":1.0,"currency":"INR","source_dataset":"intl.csv"}"""
     ).mkString("\n")
     val ip = Paths.get(dir, "international_sales.jsonl")
     Files.writeString(ip, intl)
@@ -85,7 +100,7 @@ class PipelineSpec extends SparkSpec {
     val report = Pipeline.run(spark, ev, us, s"$dir/wh", s"$dir/out",
       intlJsonl = Some(intl))
 
-    // s1, s2 (deduped keep-latest), s3; s4 skipped (null customer)
+    // s1, s2 (deduped keep-latest), s3; s4, s5 skipped (null customer)
     assert(report.metrics("intl_sales_rows") == 3L)
     val wh = new graft.warehouse.StarWarehouse(spark, s"$dir/wh")
     val fact = wh.read("fact_international_sales")
@@ -158,6 +173,9 @@ class PipelineSpec extends SparkSpec {
       .collect().toSeq
     assert(snap1 == snap2)
     assert(cust1 == cust2)
+    // events bring 03-01 and 03-02, intl 03-01, 03-02 and 02-29
+    assertDatesAndNoTmp(s"$dir/wh", Seq("2024-02-29", "2024-03-01",
+      "2024-03-02"))
   }
 
   test("pipeline is idempotent: second run leaves warehouse unchanged") {
@@ -174,5 +192,25 @@ class PipelineSpec extends SparkSpec {
       .collect().toSeq
     assert(snap1 == snap2)
     assert(types1 == types2)
+    assertDatesAndNoTmp(s"$dir/wh", Seq("2024-03-01", "2024-03-02"))
+  }
+
+  test("a failing concurrent step rethrows its error, no sibling job left") {
+    val dir = Files.createTempDirectory("graft_e2e_fail").toString
+    val (ev, us) = writeFixtures(dir)
+    val intl = writeIntlFixture(dir)
+    // every warehouse write fails: its root lies under a regular file,
+    // while the quarantine write beside them in stage 1 succeeds
+    val file = Files.writeString(Paths.get(dir, "plain_file"), "x")
+    val e = intercept[org.apache.hadoop.fs.ParentNotDirectoryException](
+      Pipeline.run(spark, ev, us, s"$file/wh", s"$dir/out", Some(intl)))
+    org.apache.spark.sql.classic.GraftTestBridge
+      .drainListenerBus(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+    // the first failing step in stage 1 is dim_users: its own exception,
+    // thrown on its own thread, reaches the caller
+    assert(e.getMessage.contains(file.toString), e.getMessage)
+    assert(e.getStackTrace.exists(_.getMethodName == "upsertDimUsers"))
+    assert(Files.exists(Paths.get(dir, "out", "bad_records")))
   }
 }

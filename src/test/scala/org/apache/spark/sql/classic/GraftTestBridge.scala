@@ -12,4 +12,9 @@ object GraftTestBridge {
   def ofRows(spark: org.apache.spark.sql.SparkSession,
              plan: LogicalPlan): org.apache.spark.sql.DataFrame =
     Dataset.ofRows(spark.asInstanceOf[SparkSession], plan)
+
+  /** Deliver every event already posted to the listener bus, so the
+    * status tracker reflects every job that has ended (`private[spark]`). */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }
