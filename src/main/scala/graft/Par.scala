@@ -15,8 +15,8 @@ package graft
   *    thread.
   *  - Every task is awaited before the first failure (in task order) is
   *    rethrown. The caller therefore never sees a failure while a sibling
-  *    write is still running, and a retry cannot race an orphan write's
-  *    directory swap on the same path.
+  *    write is still running, so a failed load's cleanup cannot race a
+  *    write into the generation it deletes.
   *
   * Callers own the write-hazard rule: no two tasks of one call may write the
   * same path, or read a path another task of the call writes.

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.analytics.EventAnalytics
 import graft.ingest.JsonlIngest
 import graft.transform.CleanEvents
@@ -19,17 +20,18 @@ import graft.operators.Quarantine
   * as concurrent jobs), and the actions of the load run as a small
   * dependency graph: every step whose inputs are ready runs at the same
   * time, through [[Par.all]].
-  *  - Stage 1: the quarantine sink and its count, dim_users,
-  *    dim_event_types, dim_customers + dim_products, and ONE dim_dates
-  *    upsert over the events' and the intl sales' dates.
-  *  - Stage 2: fact_events and fact_international_sales, each reading its
-  *    dims back from stage 1.
-  *  - Stage 3: the six CSV exports and the two fact counts.
+  *  - Stages 1 and 2 are one `StarWarehouse.load`, one commit: every dim
+  *    (ONE dim_dates upsert over the events' and the intl sales' dates),
+  *    then fact_events and fact_international_sales, each reading its dims
+  *    back from stage 1. The quarantine count runs beside it.
+  *  - Stage 3, after the commit: the quarantine sink, the six CSV exports
+  *    and the two fact counts. A failed load therefore leaves the export
+  *    root exactly as the previous run left it.
   * Write-hazard rule: no two concurrent steps write one path, and no step
   * reads a path a concurrent step writes. So each table has exactly one
   * writer per batch (dim_dates is the one table both facts need, hence a
   * single upsert), and the exports, which read the warehouse, start only
-  * after every warehouse write has returned.
+  * after the load has committed.
   *
   * Idempotence comes from keyed upserts + deterministic ids, exactly as in
   * the reference (§2.9) — run the pipeline twice over the same input and
@@ -66,23 +68,13 @@ object Pipeline {
     // optional international-sales branch (S6; run_pipeline.py:73-79):
     // load the canonical intl JSONL into fact_international_sales +
     // dim_customers/dim_products when the file exists, else skip silently.
-    val intl = intlJsonl.filter(existsPath(spark, _))
-      .map(p => Seq(JsonlIngest.readInternationalSales(spark, p)))
+    val intl = intlJsonl.filter(existsPath(spark, _)).toSeq
+      .map(JsonlIngest.readInternationalSales(spark, _))
 
-    // 4. load (D1/D2/A8, J4): stage 1, every dim plus the quarantine sink
+    // 4. load (D1/D2/A8, J4): stages 1 and 2, one commit
     val wh = new StarWarehouse(spark, warehouseRoot)
-    val dateKeys = (t.cleaned.select(col("event_date").as("date_key")) +:
-      intl.toSeq.flatten.map(_.select(col("date_key")))).reduce(_ unionByName _)
-    val loaded = Par.all(
-      write(JsonlIngest.writeBadRecords(allBad, s"$exportRoot/bad_records")),
-      countAs("bad_records_total", allBad),
-      write(wh.upsertDimUsers(t.cleaned)),
-      write(wh.upsertDimEventTypes(t.cleaned)),
-      write(wh.upsertDimDates(dateKeys, "date_key")),
-      write(intl.foreach(wh.upsertIntlDims)))
-    // stage 2: the two fact merges
-    Par.all(() => wh.mergeFactEvents(t.cleaned),
-      () => intl.foreach(wh.mergeFactInternationalSales))
+    val loaded = Par.all(write(wh.load(Some(t.cleaned), intl)),
+      countAs("bad_records_total", allBad))
 
     // 5. stage 3: analytics read side (A1–A4) over the warehouse → CSV (K1)
     val fact = wh.read("fact_events")
@@ -101,13 +93,8 @@ object Pipeline {
             wh.read("fact_international_sales"),
             col("ts"), col("gross_amt"))
           .withColumnRenamed("revenue", "intl_revenue")
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("event_date",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("intl_revenue",
-            org.apache.spark.sql.types.DoubleType))))
+      else spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        StructType.fromDDL("event_date STRING, intl_revenue DOUBLE"))
 
     // fact preview export (run_pipeline.py:82-102): ts-ordered top-50
     // with user attributes. Scale shape: TakeOrderedAndProject the fact
@@ -126,6 +113,7 @@ object Pipeline {
     def csv(name: String, df: => DataFrame) =
       write(Sinks.writeCsv(df, s"$exportRoot/$name"))
     val exported = Par.all(Seq(
+      write(JsonlIngest.writeBadRecords(allBad, s"$exportRoot/bad_records")),
       csv("dau", EventAnalytics.dau(joined)),
       csv("revenue", EventAnalytics.revenue(joined)),
       csv("event_counts", EventAnalytics.eventCounts(joined)),
@@ -133,7 +121,7 @@ object Pipeline {
       csv("international_revenue", intlRev),
       csv("fact_events_preview", preview),
       countAs("fact_events_rows", fact)) ++
-      intl.map(_ => countAs("intl_sales_rows",
+      Option.when(intl.nonEmpty)(countAs("intl_sales_rows",
         wh.read("fact_international_sales"))): _*)
 
     // 6. quality report (K3)

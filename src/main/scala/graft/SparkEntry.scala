@@ -1061,14 +1061,12 @@ object SparkEntry {
       val intl = intlCanonical(s, d) // memo is already checkpointed
       val root = s"$scratchRoot/intl_wh"
       val hp = new org.apache.hadoop.fs.Path(root)
-      val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(hp)) fs.delete(hp, true)
+      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
       val wh = new graft.warehouse.StarWarehouse(s, root)
-      // both MERGE batches land through the batched load — bit-equal to
-      // two sequential upserts (order-independent keep-latest fact merge,
-      // in-order dim id fold; Round15OpsSpec pins the equivalence) at one
-      // commit cycle's write cost
-      wh.upsertFactInternationalSalesBatches(Seq(
+      // both MERGE batches land as one load — bit-equal to two sequential
+      // loads (order-independent keep-latest fact merge, in-order dim id
+      // fold; Round15OpsSpec pins the equivalence) at one commit's cost
+      wh.load(None, Seq(
         intl.filter(col("pcs") % 2 === 0),
         intl.filter(col("pcs") % 3 =!= 1)
           .withColumn("rate", col("rate") + 1000.0)))

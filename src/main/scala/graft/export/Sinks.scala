@@ -8,37 +8,15 @@ import java.nio.file.{Files, Paths}
   *
   * The reference writes one CSV per query; `coalesce(1)` reproduces the
   * single-file layout (fine for export-sized results — NEVER for the fact
-  * tables themselves, which stay partitioned).
+  * tables themselves, which stay partitioned). Warehouse tables are written
+  * and replaced only by `graft.warehouse.StarWarehouse`; an export is a
+  * plain overwrite, because nothing reads it back.
   */
 object Sinks {
 
   /** K1: single-file CSV export with header. */
   def writeCsv(df: DataFrame, dir: String): Unit =
     df.coalesce(1).write.mode("overwrite").option("header", "true").csv(dir)
-
-  /** K4: JSONL export. */
-  def writeJsonl(df: DataFrame, dir: String): Unit =
-    df.write.mode("overwrite").json(dir)
-
-  /** Small-file compaction: rewrite a parquet directory into
-    * `ceil(bytes / targetBytes)` files (≥ 1). THE operational fix for the
-    * 100 TB small-files problem — a long-running ingest (especially the
-    * streaming upsert sink's per-batch writes) accretes files far smaller
-    * than a scan's ideal split size, and every downstream query then pays
-    * per-file open/footer costs. Sizing from the directory's actual bytes
-    * (not a fixed file count) keeps output files near the target
-    * regardless of table size; the rewrite goes through the same
-    * tmp-and-swap as the upsert sink, so a crashed compaction never
-    * leaves a half-written table. */
-  def compactParquet(spark: org.apache.spark.sql.SparkSession, path: String,
-                     targetBytes: Long = 128L * 1024 * 1024): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = fs.getContentSummary(p).getLength
-    val nFiles = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    val compacted = spark.read.parquet(path).repartition(nFiles)
-    graft.operators.Upsert.overwriteViaSwap(spark, compacted, path)
-  }
 
   /** K3: quality-report JSON (driver-side — a metrics map is not a
     * distributed dataset; quality.py:33-38). */

@@ -51,7 +51,6 @@ object CleanFns {
   /** G4: numeric coercion, null on failure (`pd.to_numeric(errors="coerce")`,
     * transform.py:89-90). ANSI-safe via try_cast. */
   def tryDouble(c: Column): Column = c.try_cast("double")
-  def tryLong(c: Column): Column   = c.try_cast("bigint")
 
   /** G10: strip thousands separators + currency sigils then parse; "" → 0.0
     * (kaggle loader:95-104). `translate` with an empty replacement deletes

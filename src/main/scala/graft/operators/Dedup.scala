@@ -36,13 +36,4 @@ object Dedup {
       .filter(col("__rn") === 1)
       .drop("__rn")
   }
-
-  /** Count of rows removed by dedup — the reference's `duplicates_removed`
-    * metric (transform.py:75, 114-119). One aggregate pass, no extra join. */
-  def removedCount(df: DataFrame, keys: Seq[String]): Long = {
-    val agg = df.groupBy(keys.map(col): _*).count()
-      .agg(sum(col("count") - lit(1)).as("removed"))
-      .collect()(0)
-    if (agg.isNullAt(0)) 0L else agg.getLong(0)
-  }
 }

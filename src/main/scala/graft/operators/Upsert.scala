@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -10,9 +10,9 @@ import org.apache.spark.sql.functions._
   * 199-217, 282-295) without a transactional table format: set-oriented
   * MERGE = `existing LEFT ANTI incoming` ∪ `incoming(deduped keep-latest)`.
   * Both sides hash-partition on the key — one shuffle each, and at scale the
-  * anti-join side can be DPP/bucket-pruned. Physical persistence uses
-  * write-to-tmp-then-swap (Spark cannot overwrite its own input;
-  * SURVEY.md §7.6.1).
+  * anti-join side can be DPP/bucket-pruned. These are frame-in/frame-out;
+  * persisting a merged table is `graft.warehouse.StarWarehouse`'s
+  * generation commit.
   */
 object Upsert {
 
@@ -56,25 +56,6 @@ object Upsert {
         keys, version, tiebreak)
       .filter(col(opCol) =!= "D")
       .drop(opCol)
-
-  /** Persist `df` to `path` atomically-enough for a batch engine: write to a
-    * tmp sibling then rename over. Idempotent replay = same result.
-    * `partitionBy` lays the table out in one directory per value of those
-    * columns. */
-  def overwriteViaSwap(spark: SparkSession, df: DataFrame, path: String,
-                       partitionBy: Seq[String] = Nil): Unit = {
-    val tmp = path + "__tmp"
-    val writer = df.write.mode("overwrite")
-    // an empty partitionBy is not a no-op: it still records a (blank)
-    // partition-columns option on the write
-    (if (partitionBy.isEmpty) writer else writer.partitionBy(partitionBy: _*))
-      .parquet(tmp)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(hconf)
-    val dst = new org.apache.hadoop.fs.Path(path)
-    if (fs.exists(dst)) fs.delete(dst, true)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), dst)
-  }
 
   /** D2: deterministic surrogate keys replicating SQLite AUTOINCREMENT over
     * `sorted(set(...))` insertion order (load.py:75-79) — `dense_rank` over

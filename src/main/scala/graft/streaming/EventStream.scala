@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.functions.CleanFns._
 import graft.operators.{Dedup, Upsert}
+import graft.warehouse.StarWarehouse
 
 /** Structured-Streaming façade over the batch engine (SURVEY.md §2.9).
   *
@@ -423,33 +424,30 @@ object EventStream {
     spark.table(name)
   }
 
-  /** D1 incrementally: per-micro-batch keyed upsert into a parquet table.
-    * Greatest `version` wins within AND across batches via the
-    * order-independent `mergeLatest` (keep-latest over everything ever
+  /** D1 incrementally: per-micro-batch keyed upsert into warehouse
+    * `root`'s `table`, one generation commit (`StarWarehouse.replace`) per
+    * micro-batch. Greatest `version` wins within AND across batches via
+    * the order-independent `mergeLatest` (keep-latest over everything ever
     * fed), so replaying ANY batch, in any order — checkpoint recovery,
     * at-least-once redelivery, out-of-order files — converges to the same
     * table: the §2.9 exactly-once story the reference gets from
     * deterministic replay, kept under streaming. Inverting the version
     * column (e.g. `-doc_id`) flips the policy to keep-FIRST, which is the
     * dedup-on-arrival composition StreamingSpec exercises. */
-  def upsertSink(stream: DataFrame, path: String, keys: Seq[String],
-                 versionCol: String, checkpoint: String): StreamingQuery =
+  def upsertSink(stream: DataFrame, root: String, table: String,
+                 keys: Seq[String], versionCol: String,
+                 checkpoint: String): StreamingQuery =
     stream.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val p = new org.apache.hadoop.fs.Path(path)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val merged =
-          if (fs.exists(p))
-            Upsert.mergeLatest(spark.read.parquet(path), batch, keys,
-              col(versionCol), Dedup.rowHash(batch))
-          else
-            Dedup.keepLatest(batch, keys, col(versionCol),
-              Dedup.rowHash(batch))
-        Upsert.overwriteViaSwap(spark, merged, path)
+        val tiebreak = Dedup.rowHash(batch)
+        new StarWarehouse(batch.sparkSession, root).replace(table) {
+          case Some(existing) => Upsert.mergeLatest(existing, batch, keys,
+            col(versionCol), tiebreak)
+          case None => Dedup.keepLatest(batch, keys, col(versionCol), tiebreak)
+        }
       }
       .start()
 

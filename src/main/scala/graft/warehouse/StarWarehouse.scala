@@ -1,5 +1,12 @@
 package graft.warehouse
 
+import java.io.File
+import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.FileUtil
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.CleanFns._
@@ -13,48 +20,138 @@ import graft.operators.{Dedup, Upsert}
   * reference's B-tree date indexes, warehouse_star.sql:71-77 — gives
   * partition pruning on every date predicate at scale).
   *
-  * A load is made of steps, each writing exactly one table through
-  * `Upsert.overwriteViaSwap`: the dims (`upsertDimUsers`,
-  * `upsertDimEventTypes`, `upsertIntlDims` — customers and products —
-  * and `upsertDimDates`) and the two fact merges (`mergeFactEvents`,
-  * `mergeFactInternationalSales`), which read their dims back from disk.
-  * `upsertFactEvents` and `upsertFactInternationalSales[Batches]` compose
-  * them: the fact's dims concurrently through [[graft.Par]], then the
-  * fact merge. `graft.Pipeline` composes the same steps across both facts
-  * so that one batch writes `dim_dates` once.
+  * [[load]] is the one load composition. Stage 1 writes every dim
+  * concurrently through [[graft.Par]], with ONE dim_dates over all the
+  * dates the load brings; stage 2 the two fact merges, which read their
+  * dims back from stage 1. Each step writes exactly one table.
+  *
+  * The reference commits its SQLite load in one transaction; here each
+  * load is one generation commit (Delta Lake's log-pointer commit,
+  * Armbrust et al., VLDB 2020, cut to one pointer per root). This class is
+  * the only code that knows the on-disk format. `root/_CURRENT` holds one
+  * line `v<n>/<table>` per table. A load writes each table it changes once,
+  * to `root/v<n>/<table>` with `n` one past the newest generation named
+  * (no `_` or `.` prefix, which Spark's listing hides), so it never writes
+  * a path it reads. It then publishes them all by atomically renaming a
+  * new pointer, staged as `v<n>/_CURRENT`, onto `root/_CURRENT` (POSIX
+  * rename: the root is a local directory). Afterwards, committed or
+  * failed, it deletes every generation `_CURRENT` does not name: the
+  * superseded tables, or its own `v<n>`. A killed load's `v<n>` makes the
+  * next load fail once (Spark refuses to write over a path) and delete it.
+  * One writer per root: two loads at once would write one generation.
   */
-object StarWarehouse {
-  /** Target bytes per output file of the range-clustered intl fact. */
-  private[warehouse] val TargetPartitionBytes: Long = 128L * 1024 * 1024
-}
-
 class StarWarehouse(spark: SparkSession, root: String) {
+  import StarWarehouse._
 
-  def path(table: String): String = s"$root/$table"
+  private val pointer = Paths.get(root, Pointer)
+
+  /** Each table's committed generation; empty before the first commit. */
+  private def committed(): Map[String, Int] =
+    if (!Files.isRegularFile(pointer)) Map.empty
+    else Files.readAllLines(pointer).asScala.map { line =>
+      val Array(gen, table) = line.split("/", 2)
+      table -> gen.stripPrefix("v").toInt
+    }.toMap
+
+  private def dir(gen: Int, table: String): String = s"$root/v$gen/$table"
 
   /** Partition-column type inference would read the `event_date=...` /
     * `date_key=...` directory keys back as DATE; the warehouse contract is
     * the reference's 'yyyy-MM-dd' string (warehouse_star.sql:34,46,57), so
     * normalize on read. */
-  def read(table: String): DataFrame = {
-    val df = spark.read.parquet(path(table))
+  private def readAt(gen: Int, table: String): DataFrame = {
+    val df = spark.read.parquet(dir(gen, table))
     Seq("event_date", "date_key").foldLeft(df) { (acc, c) =>
       if (acc.columns.contains(c)) acc.withColumn(c, col(c).cast("string"))
       else acc
     }
   }
 
-  def tableExists(table: String): Boolean = exists(table)
+  /** The committed `table`. */
+  def read(table: String): DataFrame = readAt(committed()(table), table)
 
-  private def exists(table: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path(table))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  def tableExists(table: String): Boolean = committed().contains(table)
+
+  /** One load in progress: the generations committed when it began, and
+    * the tables its steps have written since, from [[graft.Par]] threads
+    * (hence the concurrent set), under its own generation `gen`. */
+  private final class Load(base: Map[String, Int]) {
+    val gen: Int = base.values.maxOption.getOrElse(0) + 1
+    private val written = ConcurrentHashMap.newKeySet[String]()
+
+    /** `table` as written by this load, else as committed, else None. */
+    def read(table: String): Option[DataFrame] =
+      if (written.contains(table)) Some(readAt(gen, table))
+      else base.get(table).map(readAt(_, table))
+
+    def write(table: String, df: DataFrame,
+              partitionBy: Seq[String] = Nil): Unit = {
+      // an empty partitionBy is not a no-op: it still records a (blank)
+      // partition-columns option on the write
+      (if (partitionBy.isEmpty) df.write
+       else df.write.partitionBy(partitionBy: _*)).parquet(dir(gen, table))
+      written.add(table)
+    }
+
+    def publish(): Unit = {
+      val next = (base ++ written.asScala.map(_ -> gen)).toSeq.sorted
+        .map { case (table, g) => s"v$g/$table" }
+      val staged = Paths.get(root, s"v$gen", Pointer)
+      Files.write(staged, next.asJava, StandardOpenOption.CREATE_NEW)
+      Files.move(staged, pointer, StandardCopyOption.ATOMIC_MOVE)
+    }
   }
+
+  private def commit(body: Load => Unit): Unit = {
+    val load = new Load(committed())
+    try { body(load); load.publish() }
+    finally collectGarbage()
+  }
+
+  private def collectGarbage(): Unit = {
+    val live = committed().map { case (table, gen) => s"v$gen/$table" }.toSet
+    def list(f: File) = Option(f.listFiles).toSeq.flatten
+    for (gen <- list(new File(root)) if Generation.matches(gen.getName)) {
+      val tables = list(gen)
+      val dead = tables.filterNot(t => live(s"${gen.getName}/${t.getName}"))
+      if (dead.length == tables.length) FileUtil.fullyDelete(gen)
+      else dead.foreach(FileUtil.fullyDelete)
+    }
+  }
+
+  /** One star load, one commit: the events batch `cleaned` (dim_users,
+    * dim_event_types, fact_events) and the intl batches (dim_customers,
+    * dim_products, fact_international_sales), with dim_dates over all of
+    * their dates. Readers see all of it or none of it. */
+  def load(cleaned: Option[DataFrame], intl: Seq[DataFrame] = Nil): Unit =
+    commit { l =>
+      val events = cleaned.toSeq
+      val dateKeys = (events.map(_.select(col("event_date").as("date_key")))
+        ++ intl.map(_.select(col("date_key")))).reduce(_ unionByName _)
+      Par.all(
+        () => events.foreach(upsertDimUsers(l, _)),
+        () => upsertEnumDim(l, events.map(_.select(col("event"))),
+          "event", "event_type_id", "dim_event_types"),
+        () => upsertDimDates(l, dateKeys),
+        () => upsertEnumDim(l, intl.map(_.filter(col("customer").isNotNull)
+          .select(col("customer").as("customer_name"))),
+          "customer_name", "customer_id", "dim_customers"),
+        () => upsertEnumDim(l, intl.map(_.filter(col("sku").isNotNull)
+          .select(col("sku"))), "sku", "product_id", "dim_products"))
+      Par.all(
+        () => events.foreach(mergeFactEvents(l, _)),
+        () => if (intl.nonEmpty) mergeFactInternationalSales(l, intl))
+    }
+
+  /** Replace one table with `f` of its committed rows (None before its
+    * first commit), as one commit: the keyed upsert sink's step. */
+  def replace(table: String)(f: Option[DataFrame] => DataFrame): Unit =
+    commit(l => l.write(table, f(l.read(table))))
 
   /** dim_users from the cleaned (joined) events — the reference feeds the
     * joined frame, so users with no events never reach dim_users
     * (run_pipeline.py:65-70; SURVEY.md §3.1.4). F7: blank keys dropped. */
-  def upsertDimUsers(cleaned: DataFrame): Unit = {
+  private def upsertDimUsers(l: Load, cleaned: DataFrame): Unit = {
     val incoming = cleaned
       .filter(col("user_id").isNotNull && trim(col("user_id")) =!= "")
       .select(col("user_id"),
@@ -62,11 +159,9 @@ class StarWarehouse(spark: SparkSession, root: String) {
         defaultFill(col("signup_source")).as("signup_source"))
     val latest = Dedup.keepLatest(incoming, Seq("user_id"),
       lit(1), Dedup.rowHash(incoming))
-    val merged = if (exists("dim_users"))
-      Upsert.upsert(read("dim_users"), latest, Seq("user_id"), lit(1),
-        Dedup.rowHash(latest))
-    else latest
-    Upsert.overwriteViaSwap(spark, merged, path("dim_users"))
+    val merged = l.read("dim_users").fold(latest)(
+      Upsert.upsert(_, latest, Seq("user_id"), lit(1), Dedup.rowHash(latest)))
+    l.write("dim_users", merged)
   }
 
   /** One INSERT OR IGNORE round of the enum-dim id sequence, with NO
@@ -91,59 +186,45 @@ class StarWarehouse(spark: SparkSession, root: String) {
     }
   }
 
-  /** Enum dims with deterministic surrogate keys (D2). Folds N batches
-    * through the INSERT OR IGNORE id sequence IN ORDER (batch i+1's unseen
-    * keys extend the id range batch i finished at — identical ids to N
-    * one-batch calls, because each fold step is the same merge a one-batch
-    * call persists) but pays ONE write instead of N. The folded plan
-    * re-evaluates earlier batches' key sets a few times (anti-join +
-    * max-id broadcast per step) — enum dims are distinct-key scale, so
-    * re-evaluating a tiny aggregate beats re-reading and re-writing the
-    * table N−1 times on any storage. */
-  def upsertEnumDimBatches(batches: Seq[DataFrame], naturalKey: String,
-                           idCol: String, table: String): Unit = {
-    val start = if (exists(table)) Some(read(table)) else None
-    val merged = batches.foldLeft(start) { (acc, b) =>
+  /** Enum dims with deterministic surrogate keys (D2); no batches, no
+    * write. Folds N batches through the INSERT OR IGNORE id sequence IN
+    * ORDER (batch i+1's unseen keys extend the id range batch i finished
+    * at — identical ids to N one-batch loads, because each fold step is
+    * the same merge a one-batch load persists) but pays ONE write instead
+    * of N. The folded plan re-evaluates earlier batches' key sets a few
+    * times (anti-join + max-id broadcast per step) — enum dims are
+    * distinct-key scale, so re-evaluating a tiny aggregate beats
+    * re-reading and re-writing the table N−1 times on any storage. */
+  private def upsertEnumDim(l: Load, batches: Seq[DataFrame],
+                            naturalKey: String, idCol: String,
+                            table: String): Unit = if (batches.nonEmpty) {
+    val merged = batches.foldLeft(l.read(table)) { (acc, b) =>
       Some(mergeEnumDim(acc, b, naturalKey, idCol))
     }.get
     // Enum dims are broadcast-scale by construction: one output file is
     // the right layout at any fact volume (32 shuffle-partition shards of
     // a few-hundred-row dim are pure file-creation + listing overhead).
-    Upsert.overwriteViaSwap(spark, merged.coalesce(1), path(table))
+    l.write(table, merged.coalesce(1))
   }
 
   /** dim_dates (A8), INSERT OR IGNORE by date_key. */
-  def upsertDimDates(dateKeys: DataFrame, keyCol: String): Unit = {
-    val incoming = Upsert.dimDates(dateKeys, keyCol)
-    val merged = if (exists("dim_dates"))
-      read("dim_dates").unionByName(
-        incoming.join(read("dim_dates"), Seq("date_key"), "left_anti"))
-    else incoming
+  private def upsertDimDates(l: Load, dateKeys: DataFrame): Unit = {
+    val incoming = Upsert.dimDates(dateKeys, "date_key")
+    val merged = l.read("dim_dates").fold(incoming)(existing =>
+      existing.unionByName(
+        incoming.join(existing, Seq("date_key"), "left_anti")))
     // date grain: one row per day — single-file at any fact volume.
-    Upsert.overwriteViaSwap(spark, merged.coalesce(1), path("dim_dates"))
+    l.write("dim_dates", merged.coalesce(1))
   }
 
-  /** dim_event_types (D2) over the cleaned events' names. */
-  def upsertDimEventTypes(cleaned: DataFrame): Unit =
-    upsertEnumDimBatches(Seq(cleaned.select(col("event"))), "event",
-      "event_type_id", "dim_event_types")
-
-  /** fact_events upsert (D1, load.py:251-297): dim_event_types and
-    * dim_dates as concurrent Spark jobs, then [[mergeFactEvents]]. */
-  def upsertFactEvents(cleaned: DataFrame): Unit = {
-    Par.all(() => upsertDimEventTypes(cleaned),
-      () => upsertDimDates(cleaned.select(col("event_date")), "event_date"))
-    mergeFactEvents(cleaned)
-  }
-
-  /** The fact_events merge alone, once dim_event_types holds every event
-    * name in `cleaned`: resolves event_type_id via broadcast join against
-    * the enum dim (J4), keyed on event_id with latest-(ts, row-hash)-wins
-    * via the order-independent mergeLatest — replaying batches in any
-    * interleaving converges to the same fact table (§2.9; PropertySpec).
-    * Partitioned by event_date. */
-  def mergeFactEvents(cleaned: DataFrame): Unit = {
-    val dimTypes = read("dim_event_types")
+  /** fact_events upsert (D1, load.py:251-297), once dim_event_types holds
+    * every event name in `cleaned`: resolves event_type_id via broadcast
+    * join against the enum dim (J4), keyed on event_id with latest-(ts,
+    * row-hash)-wins via the order-independent mergeLatest — replaying
+    * batches in any interleaving converges to the same fact table (§2.9;
+    * PropertySpec). Partitioned by event_date. */
+  private def mergeFactEvents(l: Load, cleaned: DataFrame): Unit = {
+    val dimTypes = l.read("dim_event_types").get
     val incoming = cleaned
       .select(col("event_id"), col("ts"), col("user_id"), col("event"),
         col("amount"), col("event_date"), col("event_hour"))
@@ -152,31 +233,31 @@ class StarWarehouse(spark: SparkSession, root: String) {
     // depends on dim insertion order — hashing it would make equal-ts
     // duplicate resolution depend on batch interleaving and break the
     // §2.9 replay invariant. The dim joins are broadcast (enum-scale).
-    val merged = if (exists("fact_events")) {
-      val existingNat = read("fact_events")
+    val merged = l.read("fact_events").fold(
+      Dedup.keepLatest(incoming, Seq("event_id"), col("ts"),
+        Dedup.rowHash(incoming))) { existing =>
+      val existingNat = existing
         .join(broadcast(dimTypes), Seq("event_type_id"))
         .select(incoming.columns.map(col).toSeq: _*)
       Upsert.mergeLatest(existingNat, incoming, Seq("event_id"),
         col("ts"), Dedup.rowHash(incoming))
-    } else Dedup.keepLatest(incoming, Seq("event_id"), col("ts"),
-      Dedup.rowHash(incoming))
+    }
     val resolved = merged.join(broadcast(dimTypes), Seq("event"))
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type_id"), col("amount"), col("event_date"),
         col("event_hour"))
-    Upsert.overwriteViaSwap(spark, resolved, path("fact_events"),
-      Seq("event_date"))
+    l.write("fact_events", resolved, Seq("event_date"))
   }
 
   /** fact_international_sales upsert (S6/D1; load.py:141-219,
-    * warehouse_star.sql:54-69): ensure dim_dates for every date_key, upsert
-    * the customer/product enum dims (INSERT OR IGNORE, sorted insertion
-    * order — load.py:108-131), resolve surrogate keys through broadcast
-    * lookups (the c_map/p_map dict joins, load.py:166-172), convert types,
-    * skip rows whose dim lookup or gross_amt is null (load.py:184-186), and
+    * warehouse_star.sql:54-69), once stage 1 has loaded dim_dates and the
+    * customer/product enum dims (INSERT OR IGNORE, sorted insertion order
+    * — load.py:108-131): resolve surrogate keys through broadcast lookups
+    * (the c_map/p_map dict joins, load.py:166-172), convert types, skip
+    * rows whose dim lookup or gross_amt is null (load.py:184-186), and
     * MERGE keyed on sale_id (ON CONFLICT(sale_id) DO UPDATE,
-    * load.py:199-217). Partitioned by date_key on disk — the analog of
-    * idx_intl_sales_date (warehouse_star.sql:78).
+    * load.py:199-217). Range-clustered by date_key on disk — the analog
+    * of idx_intl_sales_date (warehouse_star.sql:78).
     *
     * `intl` columns (the canonical intl-sales record,
     * kaggle_amazon_sales_loader.py:234-246): sale_id, ts (timestamp),
@@ -189,49 +270,23 @@ class StarWarehouse(spark: SparkSession, root: String) {
     * deterministic replay under any batch interleaving (SURVEY §2.9), and
     * oracle-expressible. Both dims are enum-scale (distinct customers /
     * SKUs), so the broadcast lookups hold at any fact volume; the fact
-    * itself shuffles once, on sale_id, for the keyed merge. */
-  def upsertFactInternationalSales(intl: DataFrame): Unit =
-    upsertFactInternationalSalesBatches(Seq(intl))
-
-  /** N-batch intl load with ONE warehouse commit — bit-equal to N
-    * sequential [[upsertFactInternationalSales]] calls, at one load
-    * cycle's cost instead of N:
+    * itself shuffles once, on sale_id, for the keyed merge.
+    *
+    * N batches load as one commit, bit-equal to N loads of one batch each:
     *  - the fact merge is order-independent keep-latest over every row
     *    the table has ever been fed (mergeLatest's §2.9 contract), so
     *    keep-latest over (existing ∪ batch₁ ∪ … ∪ batchₙ) IS the
     *    sequential fixed point — one keyed shuffle, one write;
     *  - dim ids fold batch-by-batch through the same INSERT OR IGNORE
-    *    merge the sequential path persists ([[upsertEnumDimBatches]]),
+    *    merge a one-batch load persists ([[upsertEnumDim]]),
     *    so batch i+1's unseen keys extend batch i's id range exactly;
     *  - every batch resolves surrogate keys against the FINAL dims —
     *    equivalent because a key's id never changes once assigned.
-    * PipelineSpec's idempotence property covers the 1-batch form;
     * Round15OpsSpec pins batched ≡ sequential on a 2-batch overlap. */
-  def upsertFactInternationalSalesBatches(batches: Seq[DataFrame]): Unit = {
-    require(batches.nonEmpty, "at least one intl batch")
-    Par.all(() => upsertIntlDims(batches),
-      () => upsertDimDates(batches.map(_.select(col("date_key")))
-        .reduce(_ unionByName _), "date_key"))
-    mergeFactInternationalSales(batches)
-  }
-
-  /** dim_customers and dim_products, folded over `batches` in order, as
-    * concurrent Spark jobs (disjoint tables, no shared data dependency). */
-  def upsertIntlDims(batches: Seq[DataFrame]): Unit =
-    Par.all(
-      () => upsertEnumDimBatches(
-        batches.map(b => b.filter(col("customer").isNotNull)
-          .select(col("customer").as("customer_name"))),
-        "customer_name", "customer_id", "dim_customers"),
-      () => upsertEnumDimBatches(
-        batches.map(b => b.filter(col("sku").isNotNull).select(col("sku"))),
-        "sku", "product_id", "dim_products"))
-
-  /** The fact_international_sales merge alone, once dim_customers and
-    * dim_products hold every key in `batches` ([[upsertIntlDims]]). */
-  def mergeFactInternationalSales(batches: Seq[DataFrame]): Unit = {
-    val dimCust = read("dim_customers")
-    val dimProd = read("dim_products")
+  private def mergeFactInternationalSales(l: Load,
+                                          batches: Seq[DataFrame]): Unit = {
+    val dimCust = l.read("dim_customers").get
+    val dimProd = l.read("dim_products").get
     def resolve(intl: DataFrame): DataFrame = {
       val src =
         if (intl.columns.contains("source_dataset"))
@@ -250,10 +305,9 @@ class StarWarehouse(spark: SparkSession, root: String) {
     }
     val incoming = batches.map(resolve).reduce(_ unionByName _)
     val tiebreak = struct(col("pcs"), col("rate"))
-    val merged = (if (exists("fact_international_sales"))
-      Upsert.mergeLatest(read("fact_international_sales"), incoming,
-        Seq("sale_id"), col("ts"), tiebreak)
-    else Dedup.keepLatest(incoming, Seq("sale_id"), col("ts"), tiebreak))
+    val merged = l.read("fact_international_sales").fold(
+      Dedup.keepLatest(incoming, Seq("sale_id"), col("ts"), tiebreak))(
+      Upsert.mergeLatest(_, incoming, Seq("sale_id"), col("ts"), tiebreak))
       // pinned: repartitionByRange's sampling pass would otherwise
       // recompute the whole merge (existing-fact scan + dim joins +
       // keyed window) a second time for the write.
@@ -276,10 +330,17 @@ class StarWarehouse(spark: SparkSession, root: String) {
     // the schema's default row width.
     val rowBytes = merged.schema.map(_.dataType.defaultSize).sum + 20L
     val nOut = graft.Tables.partitionsFor(spark,
-      BigInt(merged.count()) * rowBytes, StarWarehouse.TargetPartitionBytes)
+      BigInt(merged.count()) * rowBytes, TargetPartitionBytes)
     val clustered = merged.repartitionByRange(nOut, col("date_key"))
       .sortWithinPartitions("date_key")
-    Upsert.overwriteViaSwap(spark, clustered,
-      path("fact_international_sales"))
+    l.write("fact_international_sales", clustered)
   }
+}
+
+object StarWarehouse {
+  /** Target bytes per output file of the range-clustered intl fact. */
+  private[warehouse] val TargetPartitionBytes: Long = 128L * 1024 * 1024
+
+  private val Pointer = "_CURRENT"
+  private val Generation = "v\\d+".r
 }

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import scala.jdk.CollectionConverters._
-
 /** End-to-end pipeline test over reference-shaped synthetic input
   * (mirrors /root/reference/scripts/generate_events.py:23-49: invalid event
   * types, null-ish user ids, one bad timestamp, a duplicate event_id, a
@@ -34,15 +32,15 @@ class PipelineSpec extends SparkSpec {
     (ep.toString, up.toString)
   }
 
-  /** dim_dates holds exactly one row per valid date, and no load left a
-    * `*__tmp` directory behind. */
-  private def assertDatesAndNoTmp(root: String, dates: Seq[String]): Unit = {
+  /** dim_dates holds exactly one row per valid date, and the only
+    * generations on disk are the ones `_CURRENT` names. */
+  private def assertDatesAndOnlyLiveGenerations(root: String,
+                                                dates: Seq[String]): Unit = {
     val wh = new graft.warehouse.StarWarehouse(spark, root)
     assert(wh.read("dim_dates").collect()
       .map(_.getAs[String]("date_key")).toSeq.sorted == dates)
-    val tmp = Files.walk(Paths.get(root)).iterator().asScala
-      .filter(_.getFileName.toString.endsWith("__tmp")).toSeq
-    assert(tmp.isEmpty, tmp.mkString(", "))
+    assert(WarehouseFiles.generations(root) ==
+      WarehouseFiles.pointer(root).sorted)
   }
 
   test("pipeline end-to-end: quarantine, dedup, star load, exports") {
@@ -174,8 +172,8 @@ class PipelineSpec extends SparkSpec {
     assert(snap1 == snap2)
     assert(cust1 == cust2)
     // events bring 03-01 and 03-02, intl 03-01, 03-02 and 02-29
-    assertDatesAndNoTmp(s"$dir/wh", Seq("2024-02-29", "2024-03-01",
-      "2024-03-02"))
+    assertDatesAndOnlyLiveGenerations(s"$dir/wh",
+      Seq("2024-02-29", "2024-03-01", "2024-03-02"))
   }
 
   test("pipeline is idempotent: second run leaves warehouse unchanged") {
@@ -192,7 +190,8 @@ class PipelineSpec extends SparkSpec {
       .collect().toSeq
     assert(snap1 == snap2)
     assert(types1 == types2)
-    assertDatesAndNoTmp(s"$dir/wh", Seq("2024-03-01", "2024-03-02"))
+    assertDatesAndOnlyLiveGenerations(s"$dir/wh",
+      Seq("2024-03-01", "2024-03-02"))
   }
 
   test("a failing concurrent step rethrows its error, no sibling job left") {
@@ -211,6 +210,74 @@ class PipelineSpec extends SparkSpec {
     // thrown on its own thread, reaches the caller
     assert(e.getMessage.contains(file.toString), e.getMessage)
     assert(e.getStackTrace.exists(_.getMethodName == "upsertDimUsers"))
-    assert(Files.exists(Paths.get(dir, "out", "bad_records")))
+    // the quarantine sink is an export: written only after the commit
+    assert(!Files.exists(Paths.get(dir, "out", "bad_records")))
+  }
+
+  /** A second batch for [[writeFixtures]] + [[writeIntlFixture]] that
+    * changes every table: e4 gets a later version, u9's first event brings
+    * a new user and date, and a new customer, SKU and date reach the intl
+    * branch. */
+  private def writeSecondBatch(dir: String): (String, String) = {
+    val events = Seq(
+      """{"event_id":"e4","ts":"2024-03-02T11:30:00Z","event":"purchase","user_id":"u2","amount":"150.00"}""",
+      """{"event_id":"e8","ts":"2024-03-03T08:00:00Z","event":"signup","user_id":"u9"}"""
+    ).mkString("\n")
+    val intl = Seq(
+      """{"sale_id":"s1","ts":"2024-03-01T18:00:00","date_key":"2024-03-01","customer":"acme","sku":"sku_a","pcs":3,"rate":10.0,"gross_amt":30.0,"currency":"INR","source_dataset":"intl.csv"}""",
+      """{"sale_id":"s6","ts":"2024-03-04T09:00:00","date_key":"2024-03-04","customer":"orbit","sku":"sku_c","pcs":1,"rate":7.0,"gross_amt":7.0,"currency":"USD","source_dataset":"intl.csv"}"""
+    ).mkString("\n")
+    val ep = Files.writeString(Paths.get(dir, "events2.jsonl"), events)
+    val ip = Files.writeString(Paths.get(dir, "international_sales2.jsonl"), intl)
+    (ep.toString, ip.toString)
+  }
+
+  /** The warehouse as a reader sees it: `_CURRENT`'s bytes and every
+    * table's rows. */
+  private def state(root: String): (String, Map[String, Seq[String]]) = {
+    val wh = new graft.warehouse.StarWarehouse(spark, root)
+    val tables = WarehouseFiles.pointer(root).map(_.split("/")(1))
+    (Files.readString(Paths.get(root, "_CURRENT")),
+      tables.map(t => t -> wh.read(t).collect().map(_.toString).toSeq.sorted)
+        .toMap)
+  }
+
+  test("a load that fails at any step leaves warehouse and exports as they " +
+    "were, and a clean re-run equals one run") {
+    val dir = Files.createTempDirectory("graft_e2e_faults").toString
+    val (ev, us) = writeFixtures(dir)
+    val intl = writeIntlFixture(dir)
+    val (ev2, intl2) = writeSecondBatch(dir)
+    val (root, out) = (s"$dir/wh", s"$dir/out")
+    Pipeline.run(spark, ev, us, root, out, Some(intl))
+    val before = state(root)
+    val exports = WarehouseFiles.files(out)
+    assert(before._2.keySet == Set("dim_users", "dim_event_types",
+      "dim_dates", "dim_customers", "dim_products", "fact_events",
+      "fact_international_sales"))
+    // batch 2's generation: every table it writes, then the staged
+    // pointer it publishes. A regular file planted at one of those paths
+    // fails that step.
+    val next = Paths.get(root, "v2")
+    for (step <- before._2.keys.toSeq.sorted :+ "_CURRENT") {
+      val plant = next.resolve(step)
+      Files.createDirectories(next)
+      Files.writeString(plant, "x")
+      val e = intercept[Exception](
+        Pipeline.run(spark, ev2, us, root, out, Some(intl2)))
+      assert(e.getMessage.contains(plant.toString), s"$step: $e")
+      assert(state(root) == before, step)
+      assert(WarehouseFiles.files(out) == exports, step)
+      // the failed load deleted its own generation, the plant with it
+      assert(!Files.exists(next), step)
+    }
+    Pipeline.run(spark, ev2, us, root, out, Some(intl2))
+    val once = s"$dir/wh_once"
+    Pipeline.run(spark, ev, us, once, s"$dir/out_once", Some(intl))
+    Pipeline.run(spark, ev2, us, once, s"$dir/out_once", Some(intl2))
+    assert(state(root) == state(once))
+    assert(state(root) != before)
+    assertDatesAndOnlyLiveGenerations(root, Seq("2024-02-29", "2024-03-01",
+      "2024-03-02", "2024-03-03", "2024-03-04"))
   }
 }

@@ -202,7 +202,7 @@ class PropertySpec extends SparkSpec {
           : Set[(String, Long, String, String, Double, String, Long)] = {
         val root = Files.createTempDirectory("graft_replay").toString
         val wh = new graft.warehouse.StarWarehouse(spark, root)
-        order.foreach(b => wh.upsertFactEvents(cleanedDf(b)))
+        order.foreach(b => wh.load(Some(cleanedDf(b))))
         naturalFacts(root)
       }
       val combined = load(Seq(rows))

@@ -50,11 +50,11 @@ class Round15OpsSpec extends SparkSpec {
       fs.delete(new org.apache.hadoop.fs.Path(r), true))
 
     val whSeq = new StarWarehouse(spark, seqRoot)
-    whSeq.upsertFactInternationalSales(b1)
-    whSeq.upsertFactInternationalSales(b2)
+    whSeq.load(None, Seq(b1))
+    whSeq.load(None, Seq(b2))
 
     val whBat = new StarWarehouse(spark, batRoot)
-    whBat.upsertFactInternationalSalesBatches(Seq(b1, b2))
+    whBat.load(None, Seq(b1, b2))
 
     assert(dump(whBat) === dump(whSeq))
     // and the id fold really extends batch 1's range in sorted order:
@@ -130,12 +130,12 @@ class Round15OpsSpec extends SparkSpec {
     // seed both warehouses with batch 1 the same way, then apply batch 2
     // + a batch 3 (reusing b1 rows = pure replay no-op) differently
     val whSeq = new StarWarehouse(spark, seqRoot)
-    whSeq.upsertFactInternationalSales(b1)
-    whSeq.upsertFactInternationalSales(b2)
-    whSeq.upsertFactInternationalSales(b1)
+    whSeq.load(None, Seq(b1))
+    whSeq.load(None, Seq(b2))
+    whSeq.load(None, Seq(b1))
     val whBat = new StarWarehouse(spark, batRoot)
-    whBat.upsertFactInternationalSales(b1)
-    whBat.upsertFactInternationalSalesBatches(Seq(b2, b1))
+    whBat.load(None, Seq(b1))
+    whBat.load(None, Seq(b2, b1))
     assert(dump(whBat) === dump(whSeq))
   }
 }

@@ -187,23 +187,6 @@ class Round4OpsSpec extends SparkSpec {
       ev.select("event_type").distinct().count())
   }
 
-  test("compactParquet collapses a small-files table without changing it") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact")
-      .toString + "/t"
-    val src = Tables.events(spark, sf)
-      .select("event_id", "user_id", "event_type", "value")
-    src.repartition(16).write.parquet(dir)
-    def partFiles = new java.io.File(dir).listFiles()
-      .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-    val before = partFiles
-    assert(before >= 16)
-    graft.export.Sinks.compactParquet(spark, dir, 512L * 1024 * 1024)
-    assert(partFiles == 1, s"expected 1 file after compaction, got $partFiles")
-    val after = spark.read.parquet(dir)
-    assert(after.count() == src.count())
-    assert(after.exceptAll(src).isEmpty && src.exceptAll(after).isEmpty)
-  }
-
   test("ann recall: IVF overlap with brute force clears the floor with margin") {
     import graft.ext.Similarity
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.01")

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.streaming.EventStream
+import graft.warehouse.StarWarehouse
 
 /** Structured-Streaming façade: the same logical plans as the batch engine,
   * driven incrementally (SURVEY.md §2.9). */
@@ -57,24 +58,24 @@ class StreamingSpec extends SparkSpec {
 
   test("foreachBatch upsert sink is idempotent under replay (D1 stream)") {
     val root = Files.createTempDirectory("graft_stream_upsert").toString
-    val tablePath = s"$root/fact"
+    val wh = new StarWarehouse(spark, root)
     def runOnce(checkpoint: String): Unit = {
       val stream = EventStream.readEventsStream(spark, sf)
         .select("event_id", "ts", "event_type", "value")
-      val q = EventStream.upsertSink(stream, tablePath, Seq("event_id"),
+      val q = EventStream.upsertSink(stream, root, "fact", Seq("event_id"),
         "ts", checkpoint)
       q.awaitTermination()
     }
     runOnce(s"$root/cp1")
-    // Materialize before replay: the swap in run 2 deletes run 1's part
-    // files, so a lazy frame over them would dangle (SURVEY.md §7.6.1).
-    val ids1 = spark.read.parquet(tablePath)
+    // Materialize before replay: the commit in run 2 deletes run 1's
+    // generation, so a lazy frame over it would dangle.
+    val ids1 = wh.read("fact")
       .select("event_id").collect().map(_.getLong(0)).toSet
     assert(ids1.size.toLong ===
       Tables.events(spark, sf).select("event_id").distinct().count())
     // Replay the whole input from a fresh checkpoint — same final state.
     runOnce(s"$root/cp2")
-    val ids2 = spark.read.parquet(tablePath)
+    val ids2 = wh.read("fact")
       .select("event_id").collect().map(_.getLong(0)).toSet
     assert(ids2 === ids1)
   }
@@ -104,9 +105,9 @@ class StreamingSpec extends SparkSpec {
       .select(col("doc_id"), col("text"),
         graft.ext.TextFns.fingerprint(col("text")).as("fp"),
         (-col("doc_id")).as("first_seen"))
-    EventStream.upsertSink(stream, s"$root/table", Seq("fp"),
+    EventStream.upsertSink(stream, root, "table", Seq("fp"),
       "first_seen", s"$root/cp").awaitTermination()
-    val out = spark.read.parquet(s"$root/table")
+    val out = new StarWarehouse(spark, root).read("table")
       .select("doc_id").as[Long].collect().toSet
     assert(out == Set(1L, 2L, 4L, 6L))
   }
@@ -165,7 +166,8 @@ class StreamingSpec extends SparkSpec {
     "reads only files that arrived after the first") {
     import spark.implicits._
     val root = Files.createTempDirectory("graft_ckpt_").toString
-    val src = s"$root/src"; val tbl = s"$root/tbl"; val ck = s"$root/ck"
+    val src = s"$root/src"; val ck = s"$root/ck"
+    val wh = new StarWarehouse(spark, root)
     def rows(r: Seq[(Long, String, Double)]) = r.toDF("event_id", "s", "v")
       .select(col("event_id"), col("s").cast("timestamp").as("ts"),
         col("v"))
@@ -177,12 +179,12 @@ class StreamingSpec extends SparkSpec {
     def run() = {
       val q = EventStream.upsertSink(
         spark.readStream.schema(schema).parquet(src),
-        tbl, Seq("event_id"), "ts", ck)
+        root, "tbl", Seq("event_id"), "ts", ck)
       q.awaitTermination()
       q
     }
     run()
-    assert(spark.read.parquet(tbl).count() === 2)
+    assert(wh.read("tbl").count() === 2)
     // second arrival: a NEWER version of key 2 plus a new key 3
     rows(Seq((2L, "2024-01-02 09:00:00", 20.0),
       (3L, "2024-01-01 12:00:00", 3.0)))
@@ -191,9 +193,44 @@ class StreamingSpec extends SparkSpec {
     // restart proof: the checkpoint let run 2 read ONLY the new file
     val read2 = q2.recentProgress.map(_.numInputRows).sum
     assert(read2 === 2, s"second run re-read old files ($read2 rows)")
-    val fin = spark.read.parquet(tbl)
+    val fin = wh.read("tbl")
       .select("event_id", "v").as[(Long, Double)].collect().toMap
     assert(fin === Map(1L -> 1.0, 2L -> 20.0, 3L -> 3.0))
+  }
+
+  test("upsert sink replay: a micro-batch whose commit fails leaves the " +
+    "previous micro-batch's table; a restart converges") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_sink_fail_").toString
+    val src = s"$root/src"; val ck = s"$root/ck"
+    val wh = new StarWarehouse(spark, root)
+    def arrive(r: Seq[(Long, String, Double)]): Unit =
+      r.toDF("event_id", "s", "v")
+        .select(col("event_id"), col("s").cast("timestamp").as("ts"),
+          col("v"))
+        .coalesce(1).write.mode("append").parquet(src)
+    def table = wh.read("tbl").select("event_id", "v")
+      .as[(Long, Double)].collect().toMap
+    arrive(Seq((1L, "2024-01-01 10:00:00", 1.0),
+      (2L, "2024-01-01 11:00:00", 2.0)))
+    val schema = spark.read.parquet(src).schema
+    def run(): Unit = EventStream.upsertSink(
+      spark.readStream.schema(schema).parquet(src),
+      root, "tbl", Seq("event_id"), "ts", ck).awaitTermination()
+    run()
+    val first = table
+    assert(first === Map(1L -> 1.0, 2L -> 2.0))
+    arrive(Seq((2L, "2024-01-02 09:00:00", 20.0),
+      (3L, "2024-01-01 12:00:00", 3.0)))
+    // a regular file where the next micro-batch writes its generation
+    val next = java.nio.file.Paths.get(root, "v2")
+    Files.writeString(Files.createDirectories(next).resolve("tbl"), "x")
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](run())
+    assert(table === first)
+    assert(!Files.exists(next)) // the failed commit deleted its generation
+    run() // restart: the checkpoint replays the failed micro-batch
+    assert(table === Map(1L -> 1.0, 2L -> 20.0, 3L -> 3.0))
+    assert(WarehouseFiles.pointer(root) === Seq("v2/tbl"))
   }
 
   test("transformWithState PSI monitor converges to the batch psiDrift " +

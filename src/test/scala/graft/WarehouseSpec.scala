@@ -60,14 +60,20 @@ class WarehouseSpec extends SparkSpec {
       ("2024-03-05", 2024L, 3L, 5L)))
   }
 
-  test("overwriteViaSwap survives replay (write twice, same state)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_upsert").toString
-    val path = s"$dir/t"
+  test("generation commit survives replay (commit twice, same state)") {
+    val root = java.nio.file.Files.createTempDirectory("graft_upsert").toString
+    val wh = new graft.warehouse.StarWarehouse(spark, root)
     val df = Seq(("a", 1L), ("b", 2L)).toDF("k", "v")
-    Upsert.overwriteViaSwap(spark, df, path)
-    Upsert.overwriteViaSwap(spark, df, path)
-    val back = spark.read.parquet(path).orderBy("k")
-      .as[(String, Long)].collect()
-    assert(back.toSeq == Seq(("a", 1L), ("b", 2L)))
+    def back = wh.read("t").orderBy("k").as[(String, Long)].collect().toSeq
+    wh.replace("t")(_ => df)
+    wh.replace("t")(_ => df)
+    assert(back == Seq(("a", 1L), ("b", 2L)))
+    // each commit is a new generation; the superseded one is deleted
+    assert(WarehouseFiles.pointer(root) == Seq("v2/t"))
+    assert(WarehouseFiles.generations(root) == Seq("v2/t"))
+    // a commit reads its input from the generation it replaces
+    wh.replace("t")(_.get.filter(col("k") === "a"))
+    assert(back == Seq(("a", 1L)))
+    assert(WarehouseFiles.generations(root) == Seq("v3/t"))
   }
 }
