@@ -877,146 +877,73 @@ object SparkEntry {
 
     // ---- streaming: event-time rollup drained via AvailableNow ----
     "q_stream_hourly_counts" -> ((s, d) => {
-      // Stateful shuffle partitions are pinned at query start and each one
-      // carries a state-store instance + per-batch checkpoint file — at
-      // this volume 8 is the right width (32 costs ~1.6× warm, ~4× cold).
-      // On a real cluster this is sized to executor count, not inherited
-      // from the batch shuffle width. Restored after the drain.
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val stream = graft.streaming.EventStream.readEventsStream(s, d)
-        graft.streaming.EventStream.runAvailableNow(
-            graft.streaming.EventStream.hourlyCounts(stream), "complete")
-          .orderBy("hour_start", "event_type")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      val stream = graft.streaming.EventStream.readEventsStream(s, d)
+      graft.streaming.EventStream.runAvailableNow(
+          graft.streaming.EventStream.hourlyCounts(stream), "complete")
+        .orderBy("hour_start", "event_type")
     }),
 
     // ---- streaming: custom keyed state (mapGroupsWithState) drained ----
     "q_stateful_totals" -> ((s, d) => {
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val stream = graft.streaming.EventStream.readEventsStream(s, d)
-        graft.streaming.EventStream.drainStatefulLatest(
-            graft.streaming.EventStream.statefulUserTotals(stream),
-            Seq("user_id"), "n_events")
-          .orderBy("user_id")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      val stream = graft.streaming.EventStream.readEventsStream(s, d)
+      graft.streaming.EventStream.drainStatefulLatest(
+          graft.streaming.EventStream.statefulUserTotals(stream),
+          Seq("user_id"), "n_events")
+        .orderBy("user_id")
     }),
 
     // ---- streaming: transformWithState (Spark 4 typed state + RocksDB) --
     "q_tws_user_stats" -> ((s, d) => {
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val prevProv = s.conf.getOption(provKey)
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")
-      try {
-        val stream = graft.streaming.EventStream.readEventsStream(s, d)
-        graft.streaming.EventStream.drainStatefulLatest(
-            graft.streaming.EventStream.twsUserStats(stream),
-            Seq("user_id"), "n_events")
-          .orderBy("user_id")
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        prevProv match {
-          case Some(p) => s.conf.set(provKey, p)
-          case None => s.conf.unset(provKey)
-        }
-      }
+      val stream = graft.streaming.EventStream.readEventsStream(s, d)
+      graft.streaming.EventStream.drainStatefulLatest(
+          graft.streaming.EventStream.twsUserStats(stream),
+          Seq("user_id"), "n_events")
+        .orderBy("user_id")
     }),
 
     "q_tws_type_counts" -> ((s, d) => {
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val prevProv = s.conf.getOption(provKey)
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")
-      try {
-        val stream = graft.streaming.EventStream.readEventsStream(s, d)
-        graft.streaming.EventStream.drainStatefulLatest(
-            graft.streaming.EventStream.twsTypeCounts(stream),
-            Seq("user_id", "event_type"), "n_events")
-          .orderBy("user_id", "event_type")
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        prevProv match {
-          case Some(p) => s.conf.set(provKey, p)
-          case None => s.conf.unset(provKey)
-        }
-      }
+      val stream = graft.streaming.EventStream.readEventsStream(s, d)
+      graft.streaming.EventStream.drainStatefulLatest(
+          graft.streaming.EventStream.twsTypeCounts(stream),
+          Seq("user_id", "event_type"), "n_events")
+        .orderBy("user_id", "event_type")
     }),
 
     "q_tws_last_n" -> ((s, d) => {
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val prevProv = s.conf.getOption(provKey)
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")
-      try {
-        val stream = graft.streaming.EventStream.readEventsStream(s, d)
-        graft.streaming.EventStream.drainStatefulLatest(
-            graft.streaming.EventStream.twsLastN(stream),
-            Seq("user_id"), "n_seen")
-          .orderBy("user_id")
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        prevProv match {
-          case Some(p) => s.conf.set(provKey, p)
-          case None => s.conf.unset(provKey)
-        }
-      }
+      val stream = graft.streaming.EventStream.readEventsStream(s, d)
+      graft.streaming.EventStream.drainStatefulLatest(
+          graft.streaming.EventStream.twsLastN(stream),
+          Seq("user_id"), "n_seen")
+        .orderBy("user_id")
     }),
 
     // ---- streaming drift monitor: converges to the batch PSI ----
     "q_stream_psi" -> ((s, d) => {
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val prevProv = s.conf.getOption(provKey)
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")
-      try {
-        // the fixed split point is monitor CONFIG (an unbounded stream has
-        // no max date) — derived here from the bounded fixture by a one-row
-        // batch pre-pass, mirroring the batch operator's midpoint
-        val mid = Tables.events(s, d)
-          .filter(col("value").isNotNull && col("ts").isNotNull &&
-            col("event_type").isNotNull)
-          .agg(min(to_date(col("ts"))).as("d0"),
-            max(to_date(col("ts"))).as("d1"))
-          .select(date_add(col("d0"),
-            (datediff(col("d1"), col("d0")) / 2).cast("int")).as("mid"))
-          .head().getDate(0)
-        val stream = graft.streaming.EventStream.readEventsStream(s, d)
-        graft.streaming.EventStream.drainStatefulLatest(
-            graft.streaming.EventStream.twsPsiDrift(stream, mid),
-            Seq("event_type"), "n_seen")
-          .drop("n_seen")
-          .orderBy("event_type")
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        prevProv match {
-          case Some(p) => s.conf.set(provKey, p)
-          case None => s.conf.unset(provKey)
-        }
-      }
+      // the fixed split point is monitor CONFIG (an unbounded stream has
+      // no max date) — derived here from the bounded fixture by a one-row
+      // batch pre-pass, mirroring the batch operator's midpoint
+      val mid = Tables.events(s, d)
+        .filter(col("value").isNotNull && col("ts").isNotNull &&
+          col("event_type").isNotNull)
+        .agg(min(to_date(col("ts"))).as("d0"),
+          max(to_date(col("ts"))).as("d1"))
+        .select(date_add(col("d0"),
+          (datediff(col("d1"), col("d0")) / 2).cast("int")).as("mid"))
+        .head().getDate(0)
+      val stream = graft.streaming.EventStream.readEventsStream(s, d)
+      graft.streaming.EventStream.drainStatefulLatest(
+          graft.streaming.EventStream.twsPsiDrift(stream, mid),
+          Seq("event_type"), "n_seen")
+        .drop("n_seen")
+        .orderBy("event_type")
     }),
 
     // ---- streaming: flatMapGroupsWithState (0..n rows per key/batch) ----
     "q_threshold_alerts" -> ((s, d) => {
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val stream = graft.streaming.EventStream.readEventsStream(s, d)
-        graft.streaming.EventStream.runAvailableNow(
-            graft.streaming.EventStream.thresholdAlerts(stream), "append")
-          .orderBy("user_id", "level")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      val stream = graft.streaming.EventStream.readEventsStream(s, d)
+      graft.streaming.EventStream.runAvailableNow(
+          graft.streaming.EventStream.thresholdAlerts(stream), "append")
+        .orderBy("user_id", "level")
     }),
 
     // ---- S5 + G7–G13 + F4–F6: Kaggle normalizer composite paths ----
@@ -1198,23 +1125,19 @@ object SparkEntry {
 
     // ---- streaming: watermarked stream-stream attribution join ----
     "q_stream_attribution" -> ((s, d) => {
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
+      val ev = graft.streaming.EventStream.readEventsStream(s, d)
+      val joined = graft.streaming.EventStream.attributionJoin(
+        ev.filter(col("event_type") === "signup"),
+        ev.filter(col("event_type") === "purchase"))
       // A stream-stream join keeps FOUR state stores per partition (left/
       // right × keyWithIndex/keyToNumValues), so its per-partition fixed
-      // cost is higher than single-operator stateful queries (which pin 8
-      // here) — 4 measures ~15% faster at fixture volume. Cluster-scale
-      // sizing follows executor count, as with the other streaming queries.
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val ev = graft.streaming.EventStream.readEventsStream(s, d)
-        val joined = graft.streaming.EventStream.attributionJoin(
-          ev.filter(col("event_type") === "signup"),
-          ev.filter(col("event_type") === "purchase"))
-        graft.streaming.EventStream.runAvailableNow(joined, "append")
-          .select(col("signup_id"), col("purchase_id"),
-            col("s_user").as("user_id"))
-          .orderBy("signup_id", "purchase_id")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      // cost is higher than single-operator stateful queries (which run
+      // at 8) — 4 measures ~15% faster at fixture volume.
+      graft.streaming.EventStream.runAvailableNow(joined, "append",
+          statePartitions = 4)
+        .select(col("signup_id"), col("purchase_id"),
+          col("s_user").as("user_id"))
+        .orderBy("signup_id", "purchase_id")
     }),
 
     // ---- ext: binned range join (attribution window; no per-key blow-up) ----
@@ -1422,33 +1345,25 @@ object SparkEntry {
 
     // ---- streaming: stream-static dimension enrichment ----
     "q_stream_enrich" -> ((s, d) => {
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val ev = graft.streaming.EventStream.readEventsStream(s, d)
-          .filter(col("user_id").isNotNull)
-        val dim = Tables.customer(s, d)
-          .select(col("c_custkey"), col("c_nationkey"))
-        graft.streaming.EventStream
-          .runAvailableNow(
-            graft.streaming.EventStream.enrichCounts(ev, dim,
-              "user_id", "c_custkey", "c_nationkey"), "complete")
-          .orderBy("c_nationkey")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      val ev = graft.streaming.EventStream.readEventsStream(s, d)
+        .filter(col("user_id").isNotNull)
+      val dim = Tables.customer(s, d)
+        .select(col("c_custkey"), col("c_nationkey"))
+      graft.streaming.EventStream
+        .runAvailableNow(
+          graft.streaming.EventStream.enrichCounts(ev, dim,
+            "user_id", "c_custkey", "c_nationkey"), "complete")
+        .orderBy("c_nationkey")
     }),
 
     // ---- streaming: watermark-bounded semantic dedup ----
     "q_stream_dedup" -> ((s, d) => {
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val stream = graft.streaming.EventStream.readEventsStream(s, d)
-        graft.streaming.EventStream
-          .runAvailableNow(
-            graft.streaming.EventStream.streamKeyDedup(stream), "append")
-          .select(col("user_id"), col("event_type"), col("minute"))
-          .orderBy("user_id", "event_type", "minute")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      val stream = graft.streaming.EventStream.readEventsStream(s, d)
+      graft.streaming.EventStream
+        .runAvailableNow(
+          graft.streaming.EventStream.streamKeyDedup(stream), "append")
+        .select(col("user_id"), col("event_type"), col("minute"))
+        .orderBy("user_id", "event_type", "minute")
     }),
 
     // ---- TPC-H anchors, round 2: Q4/Q14/Q16/Q17/Q18/Q19/Q22 shapes ----
@@ -2238,15 +2153,11 @@ object SparkEntry {
       graft.ext.Similarity.pqRecall(Tables.embeddings(s, d))),
     // stream-stream interval join: purchases within 30min of a click
     "q_stream_interval_join" -> ((s, d) => {
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val ev = graft.streaming.EventStream.readEventsStream(s, d)
-        graft.streaming.EventStream
-          .runAvailableNow(
-            graft.streaming.EventStream.streamIntervalJoin(ev), "append")
-          .orderBy("user_id", "click_id", "purchase_id")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      val ev = graft.streaming.EventStream.readEventsStream(s, d)
+      graft.streaming.EventStream
+        .runAvailableNow(
+          graft.streaming.EventStream.streamIntervalJoin(ev), "append")
+        .orderBy("user_id", "click_id", "purchase_id")
     }),
     // exact Shapley channel attribution over (user, day) coalitions
     "q_shapley_attribution" -> ((s, d) =>

@@ -1,7 +1,10 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. The invariance
+  * campaign runs it under other execution shapes with `-Dspark.*` JVM
+  * flags (see GraftSession); the `[verify-shape]` stderr line names the
+  * shape a dump ran under. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -9,17 +12,12 @@ object Verify {
     // (driver always calls with two args → full surface).
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    // Invariance-campaign knobs (dev-only; driver never sets them):
     // results must not depend on shuffle fan-out, AQE re-planning, or
-    // input-split boundaries — each override isolates one factor.
-    val spark = GraftSession.builder()
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse(
-        "SPARK_GRAFT_SHUFFLE_PARTITIONS", GraftSession.cpus.toString))
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "128m"))
-      .getOrCreate()
+    // input-split boundaries: the campaign varies each on its own
+    val spark = GraftSession.builder().getOrCreate()
+    System.err.println("[verify-shape] " + Seq("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.enabled", "spark.sql.files.maxPartitionBytes")
+      .map(k => s"$k=${spark.conf.get(k)}").mkString(" "))
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // A failed query must leave a loud artifact, not just a stderr line:

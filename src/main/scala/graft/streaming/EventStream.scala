@@ -3,6 +3,7 @@ package graft.streaming
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.functions.CleanFns._
@@ -286,17 +287,14 @@ object EventStream {
     * adapter as `graft.Tables.events` (`Tables.withEventTs`); the schema is
     * probed with a batch read — a streaming source must be given its
     * schema up front (no inference race on a growing directory). */
-  private val schemaCache =
-    scala.collection.concurrent.TrieMap
-      .empty[String, org.apache.spark.sql.types.StructType]
-
   def readEventsStream(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$sfDir/events.parquet"
-    // probe the schema once per (path, mtime), not per streaming query
-    // (each probe is a full file-footer read + job). The mtime in the key
-    // keeps the cache honest if a fixture at the same path is regenerated
-    // with the other ts encoding within one JVM (test temp dirs do this).
+    // probe the schema once per session and (path, mtime), not per
+    // streaming query (each probe is a full file-footer read + job). The
+    // mtime in the key keeps the entry honest if a fixture at the same
+    // path is regenerated with the other ts encoding (test temp dirs do
+    // this).
     val mtime = {
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -304,7 +302,7 @@ object EventStream {
         case _: java.io.FileNotFoundException => -1L
       }
     }
-    val schema = schemaCache.getOrElseUpdate(s"$path@$mtime",
+    val schema = graft.Shared(spark, s"eventsSchema@$path@$mtime")(
       spark.read.parquet(path).schema)
     // The file streaming source monitors a DIRECTORY; narrow it to the one
     // fixture file with a glob filter (a direct file path is rejected).
@@ -414,15 +412,51 @@ object EventStream {
 
   /** Drain a streaming frame on currently-available input via the memory
     * sink and return the materialized result. `AvailableNow` processes all
-    * existing files then stops — the streaming analog of a batch run. */
-  def runAvailableNow(stream: DataFrame, outputMode: String): DataFrame = {
+    * existing files then stops — the streaming analog of a batch run.
+    *
+    * The drain owns the state settings of its stream, and sets them on
+    * that stream only:
+    *  - `statePartitions` is the stateful shuffle width. It is fixed at the
+    *    query's first batch, and each partition carries a state-store
+    *    instance plus a per-batch checkpoint file, so at fixture volume 8
+    *    is the right width (32 costs ~1.6× warm, ~4× cold). On a real
+    *    cluster it is sized to the executor count, not inherited from the
+    *    batch shuffle width.
+    *  - a plan holding a `transformWithState` operator gets the RocksDB
+    *    state store, the only provider that operator runs on.
+    * They are written to the session just across `start()`, which clones
+    * the session for the stream (`StreamExecution.sparkSessionForStream`),
+    * and restored before the stream is awaited.
+    *
+    * The memory sink's temp view is dropped once the result has resolved
+    * it, so the drained rows live exactly as long as the returned frame. */
+  def runAvailableNow(stream: DataFrame, outputMode: String,
+                      statePartitions: Int = 8): DataFrame = {
     val spark = stream.sparkSession
     val name = s"graft_stream_${nameCounter.incrementAndGet()}"
-    val q = stream.writeStream.format("memory").queryName(name)
-      .outputMode(outputMode).trigger(Trigger.AvailableNow()).start()
+    val tws = stream.queryExecution.analyzed
+      .exists(_.isInstanceOf[TransformWithState])
+    val settings =
+      Seq("spark.sql.shuffle.partitions" -> statePartitions.toString) ++
+        Option.when(tws)(StateStoreProvider -> RocksDbProvider)
+    val before = spark.conf.getAll
+    val q = try {
+      settings.foreach { case (k, v) => spark.conf.set(k, v) }
+      stream.writeStream.format("memory").queryName(name)
+        .outputMode(outputMode).trigger(Trigger.AvailableNow()).start()
+    } finally settings.foreach { case (k, _) =>
+      before.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
     q.awaitTermination()
-    spark.table(name)
+    val drained = spark.table(name)
+    spark.catalog.dropTempView(name)
+    drained
   }
+
+  private val StateStoreProvider =
+    "spark.sql.streaming.stateStore.providerClass"
+  private val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** D1 incrementally: per-micro-batch keyed upsert into warehouse
     * `root`'s `table`, one generation commit (`StarWarehouse.replace`) per
@@ -490,8 +524,9 @@ object EventStream {
     * state cells (Value/List/Map) with per-state TTL, timers, and a
     * RocksDB-backed store. Requires
     * `spark.sql.streaming.stateStore.providerClass` =
-    * RocksDBStateStoreProvider (the caller sets it; the HDFS-backed
-    * default store does not support this operator). Update-mode output:
+    * RocksDBStateStoreProvider ([[runAvailableNow]] sets it for the
+    * stream; the HDFS-backed default store does not support this
+    * operator). Update-mode output:
     * one row per touched key per batch; `n_events` is monotone per key,
     * so `drainStatefulLatest` recovers the final state under any batch
     * split. */

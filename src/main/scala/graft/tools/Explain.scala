@@ -8,6 +8,10 @@ package graft.tools
   * strategies end to end (plans are only EXPLAINED here, never executed,
   * so the single-materialization guarantees the pins exist for are not
   * needed; see graft.Pins). The session is Bench's: graft.GraftSession.
+  * `-Dspark.graft.pins=on` dumps the EXECUTED shape instead (pins
+  * truncate the lineage, but exchange/join counts match what actually
+  * runs); off, iterative queries re-expand shared subtrees, so node counts
+  * are inflated there.
   * Usage: runMain graft.tools.Explain <sfDir> [q ...]
   * With SPARK_GRAFT_PLAN_DIR set, each query's plan is also written to
   * `$SPARK_GRAFT_PLAN_DIR/<query>.txt` for the plans/ evidence files. */
@@ -17,13 +21,8 @@ object Explain {
     val names = if (args.length > 1) args.drop(1).toSeq
                 else graft.SparkEntry.queries.keys.toSeq.sorted
     val planDir = sys.env.get("SPARK_GRAFT_PLAN_DIR")
-    val spark = graft.GraftSession.builder()
-      // SPARK_GRAFT_PINS=on dumps the EXECUTED shape (pins truncate the
-      // lineage but exchange/join counts match what actually runs);
-      // default off shows scans/filters end to end (iterative queries
-      // re-expand shared subtrees, so node counts are inflated there).
-      .config("spark.graft.pins", sys.env.getOrElse("SPARK_GRAFT_PINS", "off"))
-      .getOrCreate()
+    val spark = graft.GraftSession
+      .builder(own = Seq("spark.graft.pins" -> "off")).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       graft.SparkEntry.queries.get(n).foreach { fn =>

@@ -14,9 +14,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * anatomy (jobs / stages / tasks and the summed task time) — so "is this
   * query slow because of building the plan, engine work or job-count
   * overhead" is read off a number.
-  * `SPARK_GRAFT_CONF=k=v;k=v` applies extra session confs (runtime-settable
-  * ones only) before the warm-up, for A/B experiments. Dev tool, not part
-  * of the driver contract.
+  * For A/B experiments, set session confs as `-Dspark.…` JVM flags (see
+  * graft.GraftSession). Dev tool, not part of the driver contract.
   * Usage: runMain graft.tools.Profile <sfDir> <reps> [q ...] */
 object Profile {
   private val ConstructGroup = "graft-profile-construct"
@@ -110,14 +109,6 @@ object Profile {
                 else graft.SparkEntry.queries.keys.toSeq.sorted
     val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.nonEmpty => spark.conf.set(k, v)
-        case _ if kv.trim.isEmpty      => // trailing ';' etc.
-        case _ => System.err.println(
-          s"[profile] ignoring malformed SPARK_GRAFT_CONF segment '$kv'")
-      }
-    })
     val rec = new Recorder(spark)
     spark.range(1000000).selectExpr("sum(id)").collect()
     names.foreach { n =>

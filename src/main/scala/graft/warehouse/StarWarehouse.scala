@@ -36,9 +36,10 @@ import graft.operators.{Dedup, Upsert}
   * new pointer, staged as `v<n>/_CURRENT`, onto `root/_CURRENT` (POSIX
   * rename: the root is a local directory). Afterwards, committed or
   * failed, it deletes every generation `_CURRENT` does not name: the
-  * superseded tables, or its own `v<n>`. A killed load's `v<n>` makes the
-  * next load fail once (Spark refuses to write over a path) and delete it.
-  * One writer per root: two loads at once would write one generation.
+  * superseded tables, or its own `v<n>`. It deletes them before it starts
+  * as well, so the `v<n>` a killed load left cannot block the next load.
+  * One writer per root: two loads at once would write one generation, and
+  * each would delete the other's.
   */
 class StarWarehouse(spark: SparkSession, root: String) {
   import StarWarehouse._
@@ -103,6 +104,7 @@ class StarWarehouse(spark: SparkSession, root: String) {
   }
 
   private def commit(body: Load => Unit): Unit = {
+    collectGarbage()
     val load = new Load(committed())
     try { body(load); load.publish() }
     finally collectGarbage()

@@ -27,4 +27,47 @@ class GraftSessionSpec extends SparkSpec {
       .map(p => root.relativize(p).toString).toSeq
     assert(hits == Seq("main/scala/graft/GraftSession.scala"))
   }
+
+  test("a spark.* system property wins over GraftSession's value; unset " +
+    "keys keep GraftSession's") {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = sys.props.get(key)
+    sys.props(key) = "7"
+    try {
+      val own = GraftSession.settings(4) :+ ("spark.graft.pins" -> "off")
+      val applied = GraftSession.unlessOverridden(own)
+      assert(!applied.exists(_._1 == key))
+      // the build's javaOptions set two more keys, to the same values
+      assert(applied == own.filterNot { case (k, _) => sys.props.contains(k) })
+      assert(applied.contains("spark.graft.pins" -> "off"))
+      // what getOrCreate composes: a SparkConf loaded from the system
+      // properties, then the builder's settings on top
+      val conf = new org.apache.spark.SparkConf().setAll(applied)
+      assert(conf.get(key) == "7")
+      own.filterNot(_._1 == key).foreach {
+        case (k, v) => assert(conf.get(k) == v, k)
+      }
+    } finally prev.fold(sys.props.remove(key))(sys.props.put(key, _))
+  }
+
+  test("session settings are written under src/main only by " +
+    "runAvailableNow, Tables.events and readEventsStream") {
+    val root = Path.of("src/main")
+    val Def = """.*\bdef (\w+).*""".r
+    val writers = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).flatMap { p =>
+        val lines = Files.readAllLines(p).asScala.toSeq
+        lines.indices.filter { i =>
+          lines(i).contains("conf.set(") || lines(i).contains("conf.unset(")
+        }.map { i =>
+          val owner = lines.take(i + 1).reverseIterator.collectFirst {
+            case Def(name) => name
+          }
+          s"${p.getFileName}:${owner.getOrElse("?")}"
+        }
+      }.toSet
+    assert(writers == Set("Tables.scala:events",
+      "EventStream.scala:readEventsStream",
+      "EventStream.scala:runAvailableNow"))
+  }
 }

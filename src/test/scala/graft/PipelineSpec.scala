@@ -256,19 +256,16 @@ class PipelineSpec extends SparkSpec {
       "dim_dates", "dim_customers", "dim_products", "fact_events",
       "fact_international_sales"))
     // batch 2's generation: every table it writes, then the staged
-    // pointer it publishes. A regular file planted at one of those paths
-    // fails that step.
+    // pointer it publishes. A fault at one of those paths fails that step.
     val next = Paths.get(root, "v2")
     for (step <- before._2.keys.toSeq.sorted :+ "_CURRENT") {
-      val plant = next.resolve(step)
-      Files.createDirectories(next)
-      Files.writeString(plant, "x")
-      val e = intercept[Exception](
-        Pipeline.run(spark, ev2, us, root, out, Some(intl2)))
-      assert(e.getMessage.contains(plant.toString), s"$step: $e")
+      val fault = next.resolve(step)
+      val e = intercept[Exception](FaultyCommit.failing(spark, fault)(
+        Pipeline.run(spark, ev2, us, root, out, Some(intl2))))
+      assert(e.getMessage.contains(fault.toString), s"$step: $e")
       assert(state(root) == before, step)
       assert(WarehouseFiles.files(out) == exports, step)
-      // the failed load deleted its own generation, the plant with it
+      // the failed load deleted its own generation
       assert(!Files.exists(next), step)
     }
     Pipeline.run(spark, ev2, us, root, out, Some(intl2))
@@ -277,6 +274,28 @@ class PipelineSpec extends SparkSpec {
     Pipeline.run(spark, ev2, us, once, s"$dir/out_once", Some(intl2))
     assert(state(root) == state(once))
     assert(state(root) != before)
+    assertDatesAndOnlyLiveGenerations(root, Seq("2024-02-29", "2024-03-01",
+      "2024-03-02", "2024-03-03", "2024-03-04"))
+  }
+
+  test("a generation a killed load left does not block the next load") {
+    val dir = Files.createTempDirectory("graft_e2e_killed").toString
+    val (ev, us) = writeFixtures(dir)
+    val intl = writeIntlFixture(dir)
+    val (ev2, intl2) = writeSecondBatch(dir)
+    val (root, out) = (s"$dir/wh", s"$dir/out")
+    Pipeline.run(spark, ev, us, root, out, Some(intl))
+    // what a load killed mid-write leaves: a part file under the
+    // generation batch 2 will write, which `_CURRENT` does not name
+    val orphan = Paths.get(root, "v2", "dim_users", "part-0")
+    Files.createDirectories(orphan.getParent)
+    Files.writeString(orphan, "x")
+    Pipeline.run(spark, ev2, us, root, out, Some(intl2))
+    val once = s"$dir/wh_once"
+    Pipeline.run(spark, ev, us, once, s"$dir/out_once", Some(intl))
+    Pipeline.run(spark, ev2, us, once, s"$dir/out_once", Some(intl2))
+    assert(state(root) == state(once))
+    assert(WarehouseFiles.pointer(root).contains("v2/dim_users"))
     assertDatesAndOnlyLiveGenerations(root, Seq("2024-02-29", "2024-03-01",
       "2024-03-02", "2024-03-03", "2024-03-04"))
   }

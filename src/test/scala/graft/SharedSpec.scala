@@ -72,8 +72,6 @@ class SharedSpec extends SparkSpec {
           Files.readString(p).contains(needle))
         .map(p => root.relativize(p).toString).toSeq.sorted
     assert(hits("identity" + "HashCode").isEmpty)
-    // EventStream's TrieMap caches a file's schema, metadata only
-    assert(hits("Trie" + "Map") == Seq("scala/graft/Shared.scala",
-      "scala/graft/streaming/EventStream.scala"))
+    assert(hits("Trie" + "Map") == Seq("scala/graft/Shared.scala"))
   }
 }

@@ -135,31 +135,22 @@ class StreamingSpec extends SparkSpec {
 
   test("transformWithState stats equal the batch aggregate across " +
     "micro-batches (RocksDB store)") {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      val dir = Files.createTempDirectory("graft_tws_").toString
-      val ev = Tables.events(spark, sf).filter(col("user_id").isNotNull)
-      ev.repartition(4).write.mode("overwrite").parquet(dir)
-      val stream = spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(dir)
-      val streamed = EventStream.drainStatefulLatest(
-        EventStream.twsUserStats(stream), Seq("user_id"), "n_events")
-      val batch = Tables.events(spark, sf)
-        .filter(col("user_id").isNotNull)
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_events"),
-          round(sum(coalesce(col("value"), lit(0.0))), 2).as("total_value"),
-          max(coalesce(col("value"), lit(0.0))).as("max_value"))
-      assert(streamed.count() === batch.count())
-      assert(streamed.exceptAll(batch).isEmpty &&
-        batch.exceptAll(streamed).isEmpty)
-    } finally prevProv match {
-      case Some(p) => spark.conf.set(provKey, p)
-      case None => spark.conf.unset(provKey)
-    }
+    val dir = Files.createTempDirectory("graft_tws_").toString
+    val ev = Tables.events(spark, sf).filter(col("user_id").isNotNull)
+    ev.repartition(4).write.mode("overwrite").parquet(dir)
+    val stream = spark.readStream.schema(ev.schema)
+      .option("maxFilesPerTrigger", 1).parquet(dir)
+    val streamed = EventStream.drainStatefulLatest(
+      EventStream.twsUserStats(stream), Seq("user_id"), "n_events")
+    val batch = Tables.events(spark, sf)
+      .filter(col("user_id").isNotNull)
+      .groupBy(col("user_id"))
+      .agg(count(lit(1)).as("n_events"),
+        round(sum(coalesce(col("value"), lit(0.0))), 2).as("total_value"),
+        max(coalesce(col("value"), lit(0.0))).as("max_value"))
+    assert(streamed.count() === batch.count())
+    assert(streamed.exceptAll(batch).isEmpty &&
+      batch.exceptAll(streamed).isEmpty)
   }
 
   test("checkpointed upsert sink restarts incrementally: the second run " +
@@ -222,10 +213,11 @@ class StreamingSpec extends SparkSpec {
     assert(first === Map(1L -> 1.0, 2L -> 2.0))
     arrive(Seq((2L, "2024-01-02 09:00:00", 20.0),
       (3L, "2024-01-01 12:00:00", 3.0)))
-    // a regular file where the next micro-batch writes its generation
+    // the next micro-batch's write of its generation fails
     val next = java.nio.file.Paths.get(root, "v2")
-    Files.writeString(Files.createDirectories(next).resolve("tbl"), "x")
-    intercept[org.apache.spark.sql.streaming.StreamingQueryException](run())
+    FaultyCommit.failing(spark, next.resolve("tbl")) {
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](run())
+    }
     assert(table === first)
     assert(!Files.exists(next)) // the failed commit deleted its generation
     run() // restart: the checkpoint replays the failed micro-batch
@@ -235,99 +227,72 @@ class StreamingSpec extends SparkSpec {
 
   test("transformWithState PSI monitor converges to the batch psiDrift " +
     "across micro-batches (RocksDB store)") {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      val dir = Files.createTempDirectory("graft_twspsi_").toString
-      val ev = Tables.events(spark, sf)
-        .filter(col("value").isNotNull && col("ts").isNotNull &&
-          col("event_type").isNotNull)
-      ev.repartition(4).write.mode("overwrite").parquet(dir)
-      val mid = ev
-        .agg(min(to_date(col("ts"))).as("d0"),
-          max(to_date(col("ts"))).as("d1"))
-        .select(date_add(col("d0"),
-          (datediff(col("d1"), col("d0")) / 2).cast("int")).as("mid"))
-        .head.getDate(0)
-      val stream = spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(dir)
-      val streamed = EventStream.drainStatefulLatest(
-        EventStream.twsPsiDrift(stream, mid), Seq("event_type"), "n_seen")
-        .drop("n_seen")
-      val batch = graft.analytics.StatsAnalytics.psiDrift(
-        Tables.events(spark, sf))
-      assert(streamed.count() === batch.count())
-      assert(streamed.exceptAll(batch).isEmpty &&
-        batch.exceptAll(streamed).isEmpty)
-    } finally prevProv match {
-      case Some(p) => spark.conf.set(provKey, p)
-      case None => spark.conf.unset(provKey)
-    }
+    val dir = Files.createTempDirectory("graft_twspsi_").toString
+    val ev = Tables.events(spark, sf)
+      .filter(col("value").isNotNull && col("ts").isNotNull &&
+        col("event_type").isNotNull)
+    ev.repartition(4).write.mode("overwrite").parquet(dir)
+    val mid = ev
+      .agg(min(to_date(col("ts"))).as("d0"),
+        max(to_date(col("ts"))).as("d1"))
+      .select(date_add(col("d0"),
+        (datediff(col("d1"), col("d0")) / 2).cast("int")).as("mid"))
+      .head.getDate(0)
+    val stream = spark.readStream.schema(ev.schema)
+      .option("maxFilesPerTrigger", 1).parquet(dir)
+    val streamed = EventStream.drainStatefulLatest(
+      EventStream.twsPsiDrift(stream, mid), Seq("event_type"), "n_seen")
+      .drop("n_seen")
+    val batch = graft.analytics.StatsAnalytics.psiDrift(
+      Tables.events(spark, sf))
+    assert(streamed.count() === batch.count())
+    assert(streamed.exceptAll(batch).isEmpty &&
+      batch.exceptAll(streamed).isEmpty)
   }
 
   test("transformWithState MapState sub-keyed counts equal the batch " +
     "rollup across micro-batches") {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      val dir = Files.createTempDirectory("graft_twsmap_").toString
-      val ev = Tables.events(spark, sf).filter(col("user_id").isNotNull)
-      ev.repartition(4).write.mode("overwrite").parquet(dir)
-      val stream = spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(dir)
-      val streamed = EventStream.drainStatefulLatest(
-        EventStream.twsTypeCounts(stream),
-        Seq("user_id", "event_type"), "n_events")
-      val batch = ev.filter(col("event_type").isNotNull)
-        .groupBy("user_id", "event_type")
-        .agg(count(lit(1)).as("n_events"))
-      assert(streamed.count() === batch.count())
-      assert(streamed.exceptAll(batch).isEmpty &&
-        batch.exceptAll(streamed).isEmpty)
-    } finally prevProv match {
-      case Some(p) => spark.conf.set(provKey, p)
-      case None => spark.conf.unset(provKey)
-    }
+    val dir = Files.createTempDirectory("graft_twsmap_").toString
+    val ev = Tables.events(spark, sf).filter(col("user_id").isNotNull)
+    ev.repartition(4).write.mode("overwrite").parquet(dir)
+    val stream = spark.readStream.schema(ev.schema)
+      .option("maxFilesPerTrigger", 1).parquet(dir)
+    val streamed = EventStream.drainStatefulLatest(
+      EventStream.twsTypeCounts(stream),
+      Seq("user_id", "event_type"), "n_events")
+    val batch = ev.filter(col("event_type").isNotNull)
+      .groupBy("user_id", "event_type")
+      .agg(count(lit(1)).as("n_events"))
+    assert(streamed.count() === batch.count())
+    assert(streamed.exceptAll(batch).isEmpty &&
+      batch.exceptAll(streamed).isEmpty)
   }
 
   test("transformWithState ListState ring buffer is input-set pure " +
     "across micro-batches") {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      val dir = Files.createTempDirectory("graft_twslist_").toString
-      val ev = Tables.events(spark, sf).filter(col("user_id").isNotNull)
-      ev.repartition(4).write.mode("overwrite").parquet(dir)
-      val stream = spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(dir)
-      val streamed = EventStream.drainStatefulLatest(
-        EventStream.twsLastN(stream), Seq("user_id"), "n_seen")
-      // batch truth: top-3 most recent event ids per user, comma-joined
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id")
-        .orderBy(unix_micros(col("ts")).desc, col("event_id").desc)
-      val batch = ev.withColumn("rn", row_number().over(w))
-        .withColumn("n_seen", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("user_id")))
-        .filter(col("rn") <= 3)
-        .groupBy("user_id")
-        .agg(first(col("n_seen")).as("n_seen"),
-          concat_ws(",", transform(
-            array_sort(collect_list(struct(col("rn"), col("event_id")))),
-            s => s.getField("event_id").cast("string"))).as("last_ids"))
-      assert(streamed.count() === batch.count())
-      assert(streamed.exceptAll(batch).isEmpty &&
-        batch.exceptAll(streamed).isEmpty)
-    } finally prevProv match {
-      case Some(p) => spark.conf.set(provKey, p)
-      case None => spark.conf.unset(provKey)
-    }
+    val dir = Files.createTempDirectory("graft_twslist_").toString
+    val ev = Tables.events(spark, sf).filter(col("user_id").isNotNull)
+    ev.repartition(4).write.mode("overwrite").parquet(dir)
+    val stream = spark.readStream.schema(ev.schema)
+      .option("maxFilesPerTrigger", 1).parquet(dir)
+    val streamed = EventStream.drainStatefulLatest(
+      EventStream.twsLastN(stream), Seq("user_id"), "n_seen")
+    // batch truth: top-3 most recent event ids per user, comma-joined
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("user_id")
+      .orderBy(unix_micros(col("ts")).desc, col("event_id").desc)
+    val batch = ev.withColumn("rn", row_number().over(w))
+      .withColumn("n_seen", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy("user_id")))
+      .filter(col("rn") <= 3)
+      .groupBy("user_id")
+      .agg(first(col("n_seen")).as("n_seen"),
+        concat_ws(",", transform(
+          array_sort(collect_list(struct(col("rn"), col("event_id")))),
+          s => s.getField("event_id").cast("string"))).as("last_ids"))
+    assert(streamed.count() === batch.count())
+    assert(streamed.exceptAll(batch).isEmpty &&
+      batch.exceptAll(streamed).isEmpty)
   }
 
   test("flatMapGroupsWithState alerts are micro-batching-independent") {
@@ -408,47 +373,92 @@ class StreamingSpec extends SparkSpec {
   test("event-time TIMERS close the trailing session once the watermark " +
     "passes it; mid-stream sessions close inline (RocksDB store)") {
     import spark.implicits._
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      val root = Files.createTempDirectory("graft_timer_").toString
-      val src = s"$root/in"
-      val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-      def at(min: Int) = new java.sql.Timestamp(base.getTime + min * 60000L)
-      // four micro-batches (maxFilesPerTrigger=1, files in write order):
-      // f1 u1@0,@5 | f2 u1@120 (inline-closes session1) | f3 u9@240
-      // (advances wm past u1's 150-min timer) | f4 u9@480 (batch whose
-      // start-of-batch wm 239:50 fires the timer → trailing u1 session)
-      Seq(Seq((1L, at(0)), (1L, at(5))), Seq((1L, at(120))),
-        Seq((9L, at(240))), Seq((9L, at(480))))
-        .foreach { rows =>
-          rows.toDF("user_id", "ts").coalesce(1)
-            .write.mode("append").parquet(src)
-        }
-      val schema = spark.read.parquet(src).schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      val out = EventStream.runAvailableNow(
-        EventStream.twsSessionTimeout(stream), "append")
-      val got = out.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      // u1: session (0,5) closed inline by the 120' event; session (120)
-      // closed by the TIMER once wm(=240'-10s) passed 150'
-      assert(got.contains((1L, at(5).getTime, 2L)), got.toString)
-      assert(got.contains((1L, at(120).getTime, 1L)), got.toString)
-      // u9's 240' session closed inline by its 480' event; the trailing
-      // 480' session's timer (510') is beyond the final watermark and
-      // must NOT have fired
-      assert(got.contains((9L, at(240).getTime, 1L)), got.toString)
-      assert(!got.exists(r => r._1 == 9L && r._2 == at(480).getTime),
-        got.toString)
-    } finally {
-      prevProv match {
-        case Some(v) => spark.conf.set(provKey, v)
-        case None => spark.conf.unset(provKey)
+    val root = Files.createTempDirectory("graft_timer_").toString
+    val src = s"$root/in"
+    val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    def at(min: Int) = new java.sql.Timestamp(base.getTime + min * 60000L)
+    // four micro-batches (maxFilesPerTrigger=1, files in write order):
+    // f1 u1@0,@5 | f2 u1@120 (inline-closes session1) | f3 u9@240
+    // (advances wm past u1's 150-min timer) | f4 u9@480 (batch whose
+    // start-of-batch wm 239:50 fires the timer → trailing u1 session)
+    Seq(Seq((1L, at(0)), (1L, at(5))), Seq((1L, at(120))),
+      Seq((9L, at(240))), Seq((9L, at(480))))
+      .foreach { rows =>
+        rows.toDF("user_id", "ts").coalesce(1)
+          .write.mode("append").parquet(src)
       }
+    val schema = spark.read.parquet(src).schema
+    val stream = spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1").parquet(src)
+    val out = EventStream.runAvailableNow(
+      EventStream.twsSessionTimeout(stream), "append")
+    val got = out.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    // u1: session (0,5) closed inline by the 120' event; session (120)
+    // closed by the TIMER once wm(=240'-10s) passed 150'
+    assert(got.contains((1L, at(5).getTime, 2L)), got.toString)
+    assert(got.contains((1L, at(120).getTime, 1L)), got.toString)
+    // u9's 240' session closed inline by its 480' event; the trailing
+    // 480' session's timer (510') is beyond the final watermark and
+    // must NOT have fired
+    assert(got.contains((9L, at(240).getTime, 1L)), got.toString)
+    assert(!got.exists(r => r._1 == 9L && r._2 == at(480).getTime),
+      got.toString)
+  }
+
+  test("a drain drops its memory-sink view; the frame keeps the rows") {
+    val views = () => spark.catalog.listTables().collect()
+      .map(_.name).filter(_.startsWith("graft_stream_")).toSet
+    val streamed = EventStream.runAvailableNow(
+      EventStream.hourlyCounts(EventStream.readEventsStream(spark, sf)),
+      "complete")
+    assert(views().isEmpty)
+    assert(streamed.count() ===
+      EventStream.hourlyCounts(Tables.events(spark, sf)).count())
+  }
+
+  test("registry drains run their state at 8 partitions (4 for " +
+    "q_stream_attribution), RocksDB exactly for transformWithState, and " +
+    "leave the caller's settings as they were") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    import scala.jdk.CollectionConverters._
+    val tws = Set("q_tws_user_stats", "q_tws_type_counts", "q_tws_last_n",
+      "q_stream_psi")
+    val drains = tws ++ Set("q_stream_hourly_counts", "q_stateful_totals",
+      "q_threshold_alerts", "q_stream_attribution", "q_stream_enrich",
+      "q_stream_dedup", "q_stream_interval_join")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.streaming.StateOperatorProgress]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        e.progress.stateOperators.foreach(seen.add)
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.stateStore.providerClass")
+    val caller = () => keys.map(spark.conf.getAll.get)
+    spark.streams.addListener(listener)
+    val prevShuffle = spark.conf.get(keys.head)
+    spark.conf.set(keys.head, "3")
+    try drains.toSeq.sorted.foreach { q =>
+      seen.clear()
+      val before = caller()
+      SparkEntry.queries(q)(spark, sf).count()
+      assert(caller() == before, q)
+      org.apache.spark.sql.classic.GraftTestBridge
+        .drainListenerBus(spark.sparkContext)
+      val ops = seen.asScala.toSeq
+      assert(ops.nonEmpty, q)
+      val width = if (q == "q_stream_attribution") 4 else 8
+      assert(ops.map(_.numShufflePartitions).toSet == Set(width), q)
+      val rocks = ops.map(_.customMetrics.keySet.asScala
+        .exists(_.startsWith("rocksdb")))
+      assert(rocks.toSet == Set(tws(q)), q)
+    } finally {
+      spark.streams.removeListener(listener)
+      spark.conf.set(keys.head, prevShuffle)
     }
   }
 }

@@ -9,7 +9,10 @@ shape is a real distributed-correctness bug the single-shape DuckDB
 oracle can never catch.
 
 Dumps run as plain `java -cp` (no sbt project lock), so several shapes
-run concurrently; compile first (`sbt compile`). Dev tool only.
+run concurrently; compile first (`sbt compile`). A shape is a list of
+`-Dspark.*` JVM flags, which graft.GraftSession lets override its own
+settings; each dump's `[verify-shape]` stderr line must show every flag's
+value, or the dump counts as failed. Dev tool only.
 
 Usage:
   invariance_campaign.py SF_DIR OUT_ROOT [--shapes a,b,..] [--jobs 2]
@@ -26,48 +29,59 @@ ADD_OPENS = [f"--add-opens=java.base/{p}=ALL-UNNAMED" for p in (
     "sun.security.action", "sun.util.calendar")]
 
 # Each shape isolates ONE execution factor against the baseline
-# (cpus-matched shuffle count, AQE on, 128m splits — Verify's defaults).
+# (cpus-matched shuffle count, AQE on, 128m splits — the session defaults).
 SHAPES = {
-    "base": {},
+    "base": [],
     # fewer shuffle partitions than cores, and a prime — any positional
     # partition assumption or per-partition float accumulation reorders
-    "shuffle7": {"SPARK_GRAFT_SHUFFLE_PARTITIONS": "7"},
+    "shuffle7": ["-Dspark.sql.shuffle.partitions=7"],
     # far more shuffle partitions than cores — the 1000-executor shape;
     # empty partitions, different range-exchange boundary sampling
-    "shuffle64": {"SPARK_GRAFT_SHUFFLE_PARTITIONS": "64"},
+    "shuffle64": ["-Dspark.sql.shuffle.partitions=64"],
     # AQE re-plans coalesce/skew decisions at runtime; OFF must not
     # change values (it changed a surrogate-rank window's shape in r12)
-    "noaqe": {"SPARK_GRAFT_AQE": "false"},
+    "noaqe": ["-Dspark.sql.adaptive.enabled=false"],
     # small input splits multiply scan tasks — different initial
     # partitioning for every non-shuffle stage
-    "split4m": {"SPARK_GRAFT_MAX_PARTITION_BYTES": "4m"},
+    "split4m": ["-Dspark.sql.files.maxPartitionBytes=4m"],
 }
 
 
-def run_dump(sf_dir, out_dir, overrides, cpus, mem):
+def session_shape(stderr):
+    """The settings Verify's `[verify-shape]` line reports, as a dict."""
+    for line in stderr.splitlines():
+        if line.startswith("[verify-shape] "):
+            return dict(kv.split("=", 1) for kv in line.split()[1:])
+    return {}
+
+
+def run_dump(sf_dir, out_dir, flags, cpus, mem):
     t0 = time.time()
     # per-shape scratch: the sink-roundtrip/warehouse queries write real
     # files; concurrent shapes sharing one scratch dir read each other's
     # half-written output
     env = dict(os.environ, SPARK_GRAFT_CPUS=cpus,
-               SPARK_GRAFT_TMP=f"{out_dir}_scratch", **overrides)
+               SPARK_GRAFT_TMP=f"{out_dir}_scratch")
     cmd = (["java"] + ADD_OPENS +
-           [f"-Xmx{mem}", "-Dspark.ui.enabled=false", "-cp", CP,
-            "graft.Verify", sf_dir, out_dir])
+           [f"-Xmx{mem}", "-Dspark.ui.enabled=false"] + flags +
+           ["-cp", CP, "graft.Verify", sf_dir, out_dir])
     r = subprocess.run(cmd, capture_output=True, text=True, timeout=14400,
                        env=env)
     fails = {}
     fj = f"{out_dir}/failures.json"
     if os.path.exists(fj):
         fails = json.load(open(fj))
-    ok = r.returncode == 0 and not fails
+    shape = session_shape(r.stderr)
+    wanted = dict(f[len("-D"):].split("=", 1) for f in flags)
+    unapplied = {k: v for k, v in wanted.items() if shape.get(k) != v}
+    ok = r.returncode == 0 and not fails and not unapplied
     n = len(glob.glob(f"{out_dir}/*/"))
     if not ok:
         sys.stderr.write(f"[campaign] DUMP FAILED {out_dir}: exit "
-                         f"{r.returncode} failures={sorted(fails)}\n"
-                         f"{r.stderr[-1500:]}\n")
+                         f"{r.returncode} failures={sorted(fails)} "
+                         f"unapplied={unapplied}\n{r.stderr[-1500:]}\n")
     return {"ok": ok, "n_dumped": n, "wall_sec": round(time.time() - t0, 1),
-            "failures": sorted(fails)}
+            "failures": sorted(fails), "session": shape}
 
 
 def main() -> int:
