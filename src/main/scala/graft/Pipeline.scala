@@ -16,10 +16,11 @@ import graft.operators.Quarantine
   * star-schema load → analytics exports → quality report.
   *
   * The reference runs these strictly one after another. Here ingest and
-  * transform build one lazy DAG (the transform's metric actions already run
-  * as concurrent jobs), and the actions of the load run as a small
-  * dependency graph: every step whose inputs are ready runs at the same
-  * time, through [[Par.all]].
+  * transform build one lazy DAG whose `cleaned` output is pinned, so the
+  * transform's metric actions (concurrent jobs) and the four load steps
+  * that read it share one computed copy. The actions of the load run as a
+  * small dependency graph: every step whose inputs are ready runs at the
+  * same time, through [[Par.all]].
   *  - Stages 1 and 2 are one `StarWarehouse.load`, one commit: every dim
   *    (ONE dim_dates upsert over the events' and the intl sales' dates),
   *    then fact_events and fact_international_sales, each reading its dims
@@ -32,6 +33,11 @@ import graft.operators.Quarantine
   * writer per batch (dim_dates is the one table both facts need, hence a
   * single upsert), and the exports, which read the warehouse, start only
   * after the load has committed.
+  *
+  * The batch's pins (the transform's `cleaned`, the intl fact merge's
+  * checkpoint) live exactly as long as the batch: `run` releases every RDD
+  * persisted since it began in a `finally`, after stage 3 has returned, so
+  * no job that reads a pin is still running when its blocks go.
   *
   * Idempotence comes from keyed upserts + deterministic ids, exactly as in
   * the reference (§2.9) — run the pipeline twice over the same input and
@@ -52,6 +58,16 @@ object Pipeline {
   def run(spark: SparkSession, eventsJsonl: String, usersCsv: String,
           warehouseRoot: String, exportRoot: String,
           intlJsonl: Option[String] = None): RunReport = {
+    val pins = Shared.persisted(spark)
+    try runBatch(spark, eventsJsonl, usersCsv, warehouseRoot, exportRoot,
+      intlJsonl)
+    finally Shared.releasePins(spark, pins)
+  }
+
+  private def runBatch(spark: SparkSession, eventsJsonl: String,
+                       usersCsv: String, warehouseRoot: String,
+                       exportRoot: String,
+                       intlJsonl: Option[String]): RunReport = {
     // 1. ingest (S1–S4)
     val (rawEvents, badIngest) = JsonlIngest.readEvents(spark, eventsJsonl)
     val users = JsonlIngest.readUsersCsv(spark, usersCsv)

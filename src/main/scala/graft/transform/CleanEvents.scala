@@ -3,6 +3,7 @@ package graft.transform
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Par
+import graft.Pins._
 import graft.functions.CleanFns._
 import graft.operators.{Dedup, Quarantine}
 
@@ -15,6 +16,13 @@ import graft.operators.{Dedup, Quarantine}
   * Shuffle budget: exactly one (the dedup window on event_id). The users
   * join broadcasts; everything else is projections and filter splits over
   * the same scan.
+  *
+  * `cleaned` is pinned ([[graft.Pins]]): the quality metrics and every load
+  * step that reads it (dim_users, dim_event_types, dim_dates, fact_events)
+  * share one computed copy instead of each re-running the text scan, the
+  * JSON parse, the dedup shuffle and the users join. The pin is the
+  * caller's to release once its last reader has returned
+  * (`graft.Pipeline.run` does, through `graft.Shared.releasePins`).
   */
 object CleanEvents {
 
@@ -54,6 +62,7 @@ object CleanEvents {
       .join(broadcast(ensureColumns(users, RequiredUserColumns)
         .select(trim(col("user_id")).as("user_id"),
           col("country"), col("signup_source"))), Seq("user_id"), "left")
+      .pinned()
     // A7: one aggregate pass for the quality metrics (transform.py:104-119),
     // run as a concurrent Spark job beside the two input counts
     val metrics = Par.all(

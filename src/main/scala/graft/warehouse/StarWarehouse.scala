@@ -9,6 +9,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.FileUtil
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 import graft.functions.CleanFns._
 import graft.Par
 import graft.operators.{Dedup, Upsert}
@@ -32,7 +33,11 @@ import graft.operators.{Dedup, Upsert}
   * line `v<n>/<table>` per table. A load writes each table it changes once,
   * to `root/v<n>/<table>` with `n` one past the newest generation named
   * (no `_` or `.` prefix, which Spark's listing hides), so it never writes
-  * a path it reads. It then publishes them all by atomically renaming a
+  * a path it reads. Beside each table's part files it records the written
+  * frame's schema as `_schema.json` (a `_` name, so hidden from the
+  * listing); every read passes that schema, so no read starts a
+  * schema-inference job, and a table without one fails naming the table
+  * and the path. It then publishes them all by atomically renaming a
   * new pointer, staged as `v<n>/_CURRENT`, onto `root/_CURRENT` (POSIX
   * rename: the root is a local directory). Afterwards, committed or
   * failed, it deletes every generation `_CURRENT` does not name: the
@@ -56,16 +61,18 @@ class StarWarehouse(spark: SparkSession, root: String) {
 
   private def dir(gen: Int, table: String): String = s"$root/v$gen/$table"
 
-  /** Partition-column type inference would read the `event_date=...` /
-    * `date_key=...` directory keys back as DATE; the warehouse contract is
-    * the reference's 'yyyy-MM-dd' string (warehouse_star.sql:34,46,57), so
-    * normalize on read. */
+  /** Read with the schema the write recorded: no inference job, and the
+    * `event_date` partition key comes back as the contract's 'yyyy-MM-dd'
+    * string (warehouse_star.sql:34), which inference would read as DATE. */
   private def readAt(gen: Int, table: String): DataFrame = {
-    val df = spark.read.parquet(dir(gen, table))
-    Seq("event_date", "date_key").foldLeft(df) { (acc, c) =>
-      if (acc.columns.contains(c)) acc.withColumn(c, col(c).cast("string"))
-      else acc
-    }
+    val path = dir(gen, table)
+    val recorded = Paths.get(path, SchemaFile)
+    if (!Files.isRegularFile(recorded))
+      throw new IllegalStateException(
+        s"warehouse table $table has no recorded schema: $recorded is missing")
+    val schema = DataType.fromJson(Files.readString(recorded))
+      .asInstanceOf[StructType]
+    spark.read.schema(schema).parquet(path)
   }
 
   /** The committed `table`. */
@@ -87,10 +94,13 @@ class StarWarehouse(spark: SparkSession, root: String) {
 
     def write(table: String, df: DataFrame,
               partitionBy: Seq[String] = Nil): Unit = {
+      val path = dir(gen, table)
       // an empty partitionBy is not a no-op: it still records a (blank)
       // partition-columns option on the write
       (if (partitionBy.isEmpty) df.write
-       else df.write.partitionBy(partitionBy: _*)).parquet(dir(gen, table))
+       else df.write.partitionBy(partitionBy: _*)).parquet(path)
+      Files.writeString(Paths.get(path, SchemaFile), df.schema.json,
+        StandardOpenOption.CREATE_NEW)
       written.add(table)
     }
 
@@ -344,5 +354,6 @@ object StarWarehouse {
   private[warehouse] val TargetPartitionBytes: Long = 128L * 1024 * 1024
 
   private val Pointer = "_CURRENT"
+  private val SchemaFile = "_schema.json"
   private val Generation = "v\\d+".r
 }

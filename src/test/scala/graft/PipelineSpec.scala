@@ -1,6 +1,13 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.classic.GraftTestBridge
+import graft.warehouse.StarWarehouse
 
 /** End-to-end pipeline test over reference-shaped synthetic input
   * (mirrors /root/reference/scripts/generate_events.py:23-49: invalid event
@@ -43,10 +50,20 @@ class PipelineSpec extends SparkSpec {
       WarehouseFiles.pointer(root).sorted)
   }
 
+  /** `Pipeline.run` released every pin it made (`cleaned`, the intl
+    * merge's checkpoint). Checked as "no id added": an earlier suite's pin
+    * may be unpersisted by the context cleaner meanwhile. */
+  private def assertNoPinLeft(before: Set[Int]): Unit = {
+    val left = Shared.persisted(spark) -- before
+    assert(left.isEmpty, s"pins outlived Pipeline.run: $left")
+  }
+
   test("pipeline end-to-end: quarantine, dedup, star load, exports") {
     val dir = Files.createTempDirectory("graft_e2e").toString
     val (ev, us) = writeFixtures(dir)
+    val pins = Shared.persisted(spark)
     val report = Pipeline.run(spark, ev, us, s"$dir/wh", s"$dir/out")
+    assertNoPinLeft(pins)
 
     // good rows: e1,e2,e3,e4(dedup→1),e7 = 5; bad: e5,e6,missing,garbage
     assert(report.metrics("rows_out") == 5L)
@@ -201,11 +218,13 @@ class PipelineSpec extends SparkSpec {
     // every warehouse write fails: its root lies under a regular file,
     // while the quarantine write beside them in stage 1 succeeds
     val file = Files.writeString(Paths.get(dir, "plain_file"), "x")
+    val pins = Shared.persisted(spark)
     val e = intercept[org.apache.hadoop.fs.ParentNotDirectoryException](
       Pipeline.run(spark, ev, us, s"$file/wh", s"$dir/out", Some(intl)))
     org.apache.spark.sql.classic.GraftTestBridge
       .drainListenerBus(spark.sparkContext)
     assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+    assertNoPinLeft(pins)
     // the first failing step in stage 1 is dim_users: its own exception,
     // thrown on its own thread, reaches the caller
     assert(e.getMessage.contains(file.toString), e.getMessage)
@@ -298,5 +317,73 @@ class PipelineSpec extends SparkSpec {
     assert(WarehouseFiles.pointer(root).contains("v2/dim_users"))
     assertDatesAndOnlyLiveGenerations(root, Seq("2024-02-29", "2024-03-01",
       "2024-03-02", "2024-03-03", "2024-03-04"))
+  }
+
+  /** Each table's columns after [[writeFixtures]] + [[writeIntlFixture]]
+    * and then [[writeSecondBatch]], as a reader that infers the schema from
+    * the parquet files (and casts the `event_date` partition key back to
+    * the contract's string) saw them: names, types and order. */
+  private val TableColumns = Map(
+    "dim_users" -> "user_id STRING, country STRING, signup_source STRING",
+    "dim_event_types" -> "event STRING, event_type_id BIGINT",
+    "dim_dates" -> "date_key STRING, year BIGINT, month BIGINT, day BIGINT",
+    "dim_customers" -> "customer_name STRING, customer_id BIGINT",
+    "dim_products" -> "sku STRING, product_id BIGINT",
+    "fact_events" -> ("event_id STRING, ts TIMESTAMP, user_id STRING, " +
+      "event_type_id BIGINT, amount DOUBLE, event_hour BIGINT, " +
+      "event_date STRING"),
+    "fact_international_sales" -> ("sale_id STRING, ts TIMESTAMP, " +
+      "date_key STRING, customer_id BIGINT, product_id BIGINT, pcs INT, " +
+      "rate DOUBLE, gross_amt DOUBLE, currency STRING, source_dataset STRING"))
+
+  private def columns(df: org.apache.spark.sql.DataFrame): String =
+    df.schema.fields.map(f => s"${f.name} ${f.dataType.sql}").mkString(", ")
+
+  test("warehouse reads take each table's recorded schema and start no job") {
+    val dir = Files.createTempDirectory("graft_e2e_reads").toString
+    val (ev, us) = writeFixtures(dir)
+    val intl = writeIntlFixture(dir)
+    val (ev2, intl2) = writeSecondBatch(dir)
+    val (root, out) = (s"$dir/wh", s"$dir/out")
+    Pipeline.run(spark, ev, us, root, out, Some(intl))
+    // the call site of every job that batch 2 and the reads after it
+    // start: its result stage's, the newest (parent stages an adaptive
+    // plan submitted earlier carry their own map-stage jobs' sites)
+    val sites = new ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        sites.add(j.stageInfos.maxByOption(_.stageId).fold("")(_.details))
+    }
+    GraftTestBridge.drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val read = try {
+      Pipeline.run(spark, ev2, us, root, out, Some(intl2))
+      val wh = new StarWarehouse(spark, root)
+      TableColumns.keys.map(t => t -> columns(wh.read(t))).toMap
+    } finally {
+      GraftTestBridge.drainListenerBus(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(read == TableColumns)
+    val all = sites.asScala.toSeq
+    // call sites do carry graft frames (the users CSV's inference job) ...
+    assert(all.exists(_.contains("graft.Pipeline$.run(")), all)
+    // ... but none is a warehouse read's (schema inference, or listing)
+    assert(!all.exists(_.contains("readAt(")),
+      all.filter(_.contains("readAt(")).mkString("\n---\n"))
+  }
+
+  test("a table without its recorded schema fails naming table and path") {
+    val dir = Files.createTempDirectory("graft_e2e_noschema").toString
+    val (ev, us) = writeFixtures(dir)
+    val root = s"$dir/wh"
+    Pipeline.run(spark, ev, us, root, s"$dir/out")
+    val gen = WarehouseFiles.pointer(root).find(_.endsWith("/dim_users")).get
+    val recorded = Paths.get(root, gen, "_schema.json")
+    Files.delete(recorded)
+    val e = intercept[IllegalStateException](
+      new StarWarehouse(spark, root).read("dim_users"))
+    assert(e.getMessage.contains("dim_users") &&
+      e.getMessage.contains(recorded.toString), e.getMessage)
   }
 }
