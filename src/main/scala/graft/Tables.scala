@@ -1,9 +1,10 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType,
-  TimestampType}
+import org.apache.spark.sql.types.{DataType, LongType, StructType,
+  TimestampNTZType, TimestampType}
 
 /** Loaders for the driver fixtures (`/root/testdata/sf*`; see TESTDATA.md).
   *
@@ -12,10 +13,32 @@ import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType,
   * the scan narrow itself. At cluster scale the same API would point at a
   * date-partitioned table root instead of a single file — the query code
   * does not change.
+  *
+  * Every read is given its schema. [[table]] infers each file's schema
+  * once per session and modification time (a [[graft.Shared]] entry keyed
+  * `schema@<path>@<mtime>`), so later reads of the file start no
+  * inference job, and a file regenerated at the same path is probed again.
+  * The probe is also the one place that writes a session setting for a
+  * fixture read: `spark.sql.legacy.parquet.nanosAsLong`, set before the
+  * inference, which needs it to type a TIMESTAMP(NANOS) `events.ts` as a
+  * long instead of failing (see [[events]]).
   */
 object Tables {
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(schema(spark, path)).parquet(path)
+  }
+
+  /** The parquet schema of `path`, inferred once per session and mtime. */
+  private def schema(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val mtime = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(p).getModificationTime
+    Shared(spark, s"schema@$path@$mtime") {
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      spark.read.parquet(path).schema
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = table(s, d, "nation")
@@ -27,12 +50,12 @@ object Tables {
   /** `events.ts` has shipped as both parquet TIMESTAMP(NANOS) (which vanilla
     * Spark 4 rejects with [PARQUET_TYPE_ILLEGAL]) and plain TIMESTAMP(MICROS),
     * depending on the fixture generation. Adapt to whichever arrives: with
-    * the nanosAsLong conf set, a NANOS column loads as LongType — truncate it
-    * to micros with integer DIV (never a double divide, ns epochs exceed
-    * 2^53); a MICROS column loads as a real timestamp and passes through
-    * untouched. DuckDB oracles mirror both with CAST(ts AS TIMESTAMP). */
+    * the nanosAsLong conf the schema probe sets, a NANOS column loads as
+    * LongType — truncate it to micros with integer DIV (never a double
+    * divide, ns epochs exceed 2^53); a MICROS column loads as a real
+    * timestamp and passes through untouched. DuckDB oracles mirror both
+    * with CAST(ts AS TIMESTAMP). */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = table(s, d, "events")
     withEventTs(raw, raw.schema("ts").dataType)
   }

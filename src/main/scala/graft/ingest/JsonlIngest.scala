@@ -46,7 +46,6 @@ object JsonlIngest {
       RequiredFields.map(f => col("j").getField(f).isNull).reduce(_ && _)
     val missing = array_compact(array(RequiredFields.map(f =>
       when(col("j").getField(f).isNull, lit(f))): _*))
-    val ts = to_timestamp(col("j.ts")) // null on failure under try semantics
     val tsTry = try_to_timestamp(col("j.ts"))
     val reason = when(unparseable, lit("unparseable_json"))
       .when(size(missing) > 0,

@@ -283,27 +283,13 @@ object EventStream {
 
   private val nameCounter = new AtomicLong(0)
 
-  /** Streaming scan of the events fixture. `ts` goes through the same
-    * adapter as `graft.Tables.events` (`Tables.withEventTs`); the schema is
-    * probed with a batch read — a streaming source must be given its
-    * schema up front (no inference race on a growing directory). */
+  /** Streaming scan of the events fixture. A streaming source must be
+    * given its schema up front (no inference race on a growing directory):
+    * it takes the batch read's, from `graft.Tables.table`'s probe (once
+    * per session and file mtime), and `ts` goes through the batch
+    * adapter, `Tables.withEventTs`. */
   def readEventsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val path = s"$sfDir/events.parquet"
-    // probe the schema once per session and (path, mtime), not per
-    // streaming query (each probe is a full file-footer read + job). The
-    // mtime in the key keeps the entry honest if a fixture at the same
-    // path is regenerated with the other ts encoding (test temp dirs do
-    // this).
-    val mtime = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      try fs.getFileStatus(p).getModificationTime catch {
-        case _: java.io.FileNotFoundException => -1L
-      }
-    }
-    val schema = graft.Shared(spark, s"eventsSchema@$path@$mtime")(
-      spark.read.parquet(path).schema)
+    val schema = graft.Tables.table(spark, sfDir, "events").schema
     // The file streaming source monitors a DIRECTORY; narrow it to the one
     // fixture file with a glob filter (a direct file path is rejected).
     val raw = spark.readStream.schema(schema)

@@ -28,8 +28,6 @@ object Profile {
     @volatile var jobs, conJobs, stages, tasks = 0
     @volatile var taskMs = 0L
     @volatile var phases = Map.empty[String, Long]
-    val stageLog =
-      new java.util.concurrent.ConcurrentLinkedQueue[(String, Int, Long)]
     spark.sparkContext.addSparkListener(this)
     spark.listenerManager.register(this)
     def close(): Unit = {
@@ -41,13 +39,8 @@ object Profile {
       if (Option(j.properties).exists(
           _.getProperty("spark.jobGroup.id") == ConstructGroup)) conJobs += 1
     }
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
       stages += 1
-      val i = s.stageInfo
-      val dur = (for (a <- i.completionTime; b <- i.submissionTime)
-        yield a - b).getOrElse(-1L)
-      stageLog.add((i.name.linesIterator.next(), i.numTasks, dur))
-    }
     override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
       tasks += 1
       if (t.taskInfo != null) taskMs += t.taskInfo.duration
@@ -124,14 +117,6 @@ object Profile {
             f"plan=${l.planMs}%.0f exe=${l.exeMs}%.1f ms jobs=${l.jobs}%d " +
             f"stages=${l.stages}%d tasks=${l.tasks}%d taskSec=${l.taskSec}%.2f")
         } catch { case e: Throwable => println(s"$n FAILED: $e") }
-        if (sys.env.contains("SPARK_GRAFT_STAGES")) {
-          import scala.jdk.CollectionConverters._
-          rec.stageLog.asScala.toSeq.sortBy(-_._3).take(12).foreach {
-            case (nm, nt, dur) =>
-              println(f"    stage $dur%6dms tasks=$nt%-4d $nm")
-          }
-        }
-        rec.stageLog.clear()
       }
     }
     spark.stop()

@@ -169,10 +169,10 @@ class StarWarehouse(spark: SparkSession, root: String) {
       .select(col("user_id"),
         defaultFill(col("country")).as("country"),
         defaultFill(col("signup_source")).as("signup_source"))
-    val latest = Dedup.keepLatest(incoming, Seq("user_id"),
-      lit(1), Dedup.rowHash(incoming))
-    val merged = l.read("dim_users").fold(latest)(
-      Upsert.upsert(_, latest, Seq("user_id"), lit(1), Dedup.rowHash(latest)))
+    val hash = Dedup.rowHash(incoming)
+    val merged = l.read("dim_users").fold(
+      Dedup.keepLatest(incoming, Seq("user_id"), lit(1), hash))(
+      Upsert.upsert(_, incoming, Seq("user_id"), lit(1), hash))
     l.write("dim_users", merged)
   }
 

@@ -51,7 +51,7 @@ class GraftSessionSpec extends SparkSpec {
   }
 
   test("session settings are written under src/main only by " +
-    "runAvailableNow, Tables.events and readEventsStream") {
+    "runAvailableNow and the Tables schema probe") {
     val root = Path.of("src/main")
     val Def = """.*\bdef (\w+).*""".r
     val writers = Files.walk(root).iterator().asScala
@@ -66,8 +66,7 @@ class GraftSessionSpec extends SparkSpec {
           s"${p.getFileName}:${owner.getOrElse("?")}"
         }
       }.toSet
-    assert(writers == Set("Tables.scala:events",
-      "EventStream.scala:readEventsStream",
+    assert(writers == Set("Tables.scala:schema",
       "EventStream.scala:runAvailableNow"))
   }
 }
